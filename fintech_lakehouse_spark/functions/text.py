@@ -56,7 +56,7 @@ def drop_hot_keys(rows: DataFrame, key: str, max_df: int) -> DataFrame:
     the sort-merge self-join every consumer runs next. Interleaved
     min-of-5 A/B at sf0.1: ngram_jaccard pipeline 1.551 → 1.003 s,
     ngram_containment 1.380 → 1.002 s; row-identity vs the anti-join
-    form pinned at sf0.01 (scripts/r16_ngram_ab.py). Callers whose
+    form pinned at sf0.01 (OPTIMIZATION_r16.md §3). Callers whose
     DuckDB oracle says COUNT(DISTINCT doc_id) rely on per-doc
     distinctness of the exploded rows (word_shingles/winnow_selected
     return distinct arrays) — pinned by tests/test_scale_patterns.py::

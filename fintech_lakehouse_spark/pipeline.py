@@ -33,6 +33,7 @@ from fintech_lakehouse_spark.operators.metadata import (
 )
 from fintech_lakehouse_spark.quality import DataQualityChecker
 from fintech_lakehouse_spark.sources.writers import (
+    read_existing_table,
     read_lake_table,
     replace_lake_rows,
     upsert_lake_table,
@@ -240,15 +241,9 @@ class MedallionPipeline:
         from fintech_lakehouse_spark.operators.keys import (
             extend_dense_surrogate_key,
         )
-        from fintech_lakehouse_spark.sources.writers import _is_missing_path
 
         path = self.config.layer_path("gold", name)
-        try:
-            existing = read_lake_table(self.spark, path)
-        except Exception as exc:
-            if not _is_missing_path(exc, path):
-                raise
-            existing = None
+        existing = read_existing_table(self.spark, path)
         if existing is None:
             refreshed = build_fn(snapshot).persist()
         else:
@@ -307,35 +302,22 @@ class MedallionPipeline:
             r["transaction_date"]
             for r in fact_delta.select("transaction_date").distinct().collect()
         }
-        try:
-            old_dates = {
-                r["transaction_date"]
-                for r in read_lake_table(self.spark, fact_path)
-                .join(
-                    fact_delta.select("transaction_id").distinct(),
-                    "transaction_id",
-                    "left_semi",
-                )
-                .select("transaction_date")
-                .distinct()
-                .collect()
-            }
-        except Exception as exc:
-            # ONLY a missing fact table is "first run". A transient
-            # read error swallowed here would skip old-date recompute
-            # and leave a restated transaction's stale
-            # agg_daily_metrics row in place — the exact staleness bug
-            # this collect exists to fix (ADVICE r4 medium #2).
-            from fintech_lakehouse_spark.sources.writers import (
-                _is_missing_path,
+        # ONLY a missing fact table is "first run": a transient read
+        # error swallowed here would skip the old-date recompute and
+        # leave a restated transaction's stale agg_daily_metrics row
+        # in place — the staleness bug this collect exists to fix.
+        fact = read_existing_table(self.spark, fact_path)
+        old_dates = set() if fact is None else {
+            r["transaction_date"]
+            for r in fact.join(
+                fact_delta.select("transaction_id").distinct(),
+                "transaction_id",
+                "left_semi",
             )
-
-            # pass the path: without it UNABLE_TO_INFER_SCHEMA from a
-            # damaged (data-files-lost) table also classifies as
-            # first-run, silently skipping the old-date recompute
-            if not _is_missing_path(exc, fact_path):
-                raise
-            old_dates = set()
+            .select("transaction_date")
+            .distinct()
+            .collect()
+        }
         # None-safe sort: a NULL transaction_date (quarantine gap) must
         # not TypeError the whole refresh mid-flight
         dates = sorted(dates | old_dates, key=lambda d: (d is None, d))

@@ -217,7 +217,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit ``repartition("shingle")`` right after explode gives
     every consumer the SAME exchange subtree to reuse: the derivation
     runs once and the groupBys/joins read the reused shuffle.
-    A/B (scripts/ab_ngram_reuse.py, sf0.1, fresh session ×3):
+    A/B (BASELINE.md §2 Round-6b, sf0.1, fresh session ×3):
     min 7.11 s → 3.00 s, first-cold 12.6 s → 3.2 s. This also
     subsumes the r5 persist() A/B (cold-equal, rejected): repartition
     stays inside the shuffle system and pipelines, persist() is an
@@ -306,7 +306,7 @@ def ngram_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join bounded by the >100-doc hot-shingle drop on both engines;
     same single repartition("shingle") that lets ReusedExchange
     collapse every copy of the shingle derivation — see that query's
-    r6 plan note and scripts/ab_ngram_reuse.py); only the final
+    r6 plan note and BASELINE.md §2 Round-6b); only the final
     scoring expression differs, so the plan inherits that query's
     measured linearity."""
     documents = load_table(spark, sf_dir, "documents")

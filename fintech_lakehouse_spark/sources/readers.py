@@ -145,16 +145,14 @@ def read_orc_to_df(
 # arithmetic) used by the conditional scan spread below.
 _SCHEMA_CATALOG: dict[tuple[str, float | None], tuple["StructType", int]] = {}
 
-# Spark's file-split packing constants (spark.sql.files.*): splits ≈
-# ceil((bytes + n_files·openCost) / maxPartitionBytes), floored at 1.
-_MAX_PARTITION_BYTES = 128 << 20
-_OPEN_COST_BYTES = 4 << 20
 
-
-def _estimate_scan_splits(path: str) -> int:
+def _estimate_scan_splits(spark: SparkSession, path: str) -> int:
     """Estimated scan-task count for a parquet path from file metadata
-    alone (no Spark job): Spark packs files into splits of
-    maxPartitionBytes, charging openCostInBytes per file. The estimate
+    alone (no Spark job): Spark packs files into splits of the session's
+    spark.sql.files.maxPartitionBytes, charging openCostInBytes per
+    file — splits ≈ ceil((bytes + n_files·openCost) / maxPartitionBytes),
+    floored at 1. Both sizes come from the parsed SQLConf (the raw
+    ``spark.conf.get`` strings carry units like '64m'). The estimate
     only feeds a LESS-THAN-CORES comparison, so row-group granularity
     (which can only reduce effective parallelism further) never flips
     the decision the wrong way."""
@@ -174,8 +172,9 @@ def _estimate_scan_splits(path: str) -> int:
                     n_files += 1
     except OSError:
         return 1
-    padded = total + n_files * _OPEN_COST_BYTES
-    return max(1, -(-padded // _MAX_PARTITION_BYTES))
+    conf = spark._jsparkSession.sessionState().conf()
+    padded = total + n_files * conf.filesOpenCostInBytes()
+    return max(1, -(-padded // conf.filesMaxPartitionBytes()))
 
 
 def reset_table_schema_catalog() -> None:
@@ -201,7 +200,7 @@ def load_table(
     every scan — and everything Spark pipelines into the scan stage:
     shingle/gram derivations, partial aggregations, winnowing — ran as
     ONE task on one core (measured 1.10–1.99× whole-query wins across
-    ten bench queries from this one change; scripts/r16_spread_ab.py).
+    ten bench queries from this one change; OPTIMIZATION_r16.md §1).
     The condition is pure file metadata (cached in the schema
     catalog): at production scale the same table has splits ≥ cores
     and the repartition VANISHES from the plan, so this is layout
@@ -245,7 +244,7 @@ def load_table(
     hit = _SCHEMA_CATALOG.get(key) if mtime is not None else None
     if hit is None:
         df = spark.read.parquet(path)
-        splits = _estimate_scan_splits(path)
+        splits = _estimate_scan_splits(spark, path)
         if mtime is not None:
             # evict stale same-path entries before inserting (ADVICE
             # r15: the catalog must not grow per rewrite, and a stale

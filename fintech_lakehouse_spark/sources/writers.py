@@ -212,6 +212,76 @@ def _cast_to_schema(df: DataFrame, schema) -> DataFrame:
     )
 
 
+# Sibling working dir of a staged rewrite (``<table>__staging``); a
+# crash between the staging write and its delete leaves it for
+# vacuum_lake_table to reap.
+_STAGING_SUFFIX = "__staging"
+
+
+def _parquet_overwrite(df: DataFrame, partition_by: list[str] | None):
+    """Overwrite-mode parquet writer for ``df``, partitioned when asked
+    — the parquet-mode writers never silently drop a table's partition
+    layout (ADVICE r2: it would disable pruning for every reader)."""
+    w = df.write.format("parquet").mode("overwrite")
+    return w.partitionBy(*partition_by) if partition_by else w
+
+
+def _staged_overwrite(
+    spark: SparkSession,
+    frame: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    dynamic: bool = False,
+) -> set[tuple] | None:
+    """Overwrite ``path`` with ``frame`` through ``<path>__staging``:
+    parquet can't overwrite a path the frame still reads from, so the
+    frame is written to the sibling staging dir first (repartitioned so
+    tasks hold whole partition values), read back with ``frame``'s
+    exact types and copied over the target. ``dynamic`` replaces ONLY
+    the partition dirs present in the copy (untouched partitions keep
+    their files) and returns the partition values it wrote, collected
+    from the staged copy.
+
+    The staging dir is deleted only after the copy succeeded — if the
+    copy fails, the staged rows survive for recovery (and for
+    vacuum_lake_table) instead of leaving no copy at all."""
+    staging = path.rstrip("/") + _STAGING_SUFFIX
+    out = frame
+    if partition_by:
+        out = out.repartition(*[F.col(c) for c in partition_by])
+    _parquet_overwrite(out, partition_by).save(staging)
+    staged = _cast_to_schema(
+        _read_typed(spark, staging, frame, partition_by), frame.schema
+    )
+    w = _parquet_overwrite(staged, partition_by)
+    if dynamic:
+        w = w.option("partitionOverwriteMode", "dynamic")
+    w.save(path)
+    written = (
+        {tuple(r) for r in staged.select(*partition_by).distinct().collect()}
+        if dynamic
+        else None
+    )
+    # otherwise every rewrite leaves a full copy of its rows on disk
+    fs, jvm = hadoop_fs(spark, staging)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    spark.catalog.refreshByPath(path)
+    return written
+
+
+def _partitions_predicate(rows, partition_by: list[str]):
+    """Column predicate matching any of ``rows``' partition values.
+    eqNullSafe, so a NULL partition value matches its own dir."""
+    pred = None
+    for row in rows:
+        clause = None
+        for c in partition_by:
+            eq = F.col(c).eqNullSafe(F.lit(row[c]))
+            clause = eq if clause is None else clause & eq
+        pred = clause if pred is None else pred | clause
+    return pred
+
+
 def write_lake_table(
     df: DataFrame,
     path: str,
@@ -318,6 +388,24 @@ def read_lake_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.format(lake_format()).load(path)
 
 
+def read_existing_table(
+    spark: SparkSession, path: str, read=None
+) -> DataFrame | None:
+    """The table at ``path`` through ``read`` (default read_lake_table),
+    or None when it has not been written yet — the ONE first-run
+    fallback every merge/refresh site shares. Only errors
+    ``_is_missing_path`` classifies as a missing table mean "first
+    run"; everything else (transient FS error, permission, a damaged
+    table) re-raises rather than being silently overwritten (ADVICE r4
+    medium #2, r5 low #2)."""
+    try:
+        return (read or read_lake_table)(spark, path)
+    except Exception as exc:
+        if not _is_missing_path(exc, path):
+            raise
+        return None
+
+
 def register_lake_table(
     spark: SparkSession, path: str, database: str, table: str
 ) -> None:
@@ -371,11 +459,8 @@ def upsert_lake_table(
     not table size. Without ``partition_by`` the fallback is a
     documented full rewrite (fine for dims).
     """
-    try:
-        existing = read_lake_table(spark, target_path)
-    except Exception as exc:
-        if not _is_missing_path(exc, target_path):
-            raise  # transient/corrupt reads are NOT "first run"
+    existing = read_existing_table(spark, target_path)
+    if existing is None:
         write_lake_table(source_df, target_path, mode="overwrite",
                          partition_by=partition_by)
         return
@@ -503,15 +588,10 @@ def upsert_lake_table(
         if len(affected) > MAX_SELECTIVE_PARTITIONS:
             selective = False
         else:
-            part_filter = None
-            for row in affected:
-                clause = None
-                for c in partition_by:
-                    eq = F.col(c).eqNullSafe(F.lit(row[c]))
-                    clause = eq if clause is None else clause & eq
-                part_filter = clause if part_filter is None else part_filter | clause
             # Partition pruning: only affected dirs are scanned.
-            existing = existing.filter(part_filter)
+            existing = existing.filter(
+                _partitions_predicate(affected, partition_by)
+            )
 
     tagged_source = source_df.withColumn("_merge_rank", F.lit(0))
     tagged_target = existing.withColumn("_merge_rank", F.lit(1))
@@ -525,107 +605,51 @@ def upsert_lake_table(
         .filter(F.col("_merge_rn") == 1)
         .drop("_merge_rank", "_merge_rn")
     )
-    # Parquet can't atomically overwrite a path it is reading; stage
-    # through a temp dir next to the target.
-    staging = target_path.rstrip("/") + "__staging"
-    if selective:
-        merged.repartition(*[F.col(c) for c in partition_by]).write.format(
-            "parquet"
-        ).mode("overwrite").partitionBy(*partition_by).save(staging)
-        staged = _cast_to_schema(
-            _read_typed(spark, staging, merged, partition_by), merged.schema
+    if not selective:
+        # Full rewrite — partition layout kept (see _parquet_overwrite).
+        _staged_overwrite(spark, merged, target_path, partition_by)
+        return
+    remaining = _staged_overwrite(
+        spark, merged, target_path, partition_by, dynamic=True
+    )
+    # An affected partition can end up EMPTY (every key moved to a new
+    # partition value); dynamic overwrite never sees it, so the stale
+    # dir must be dropped explicitly.
+    emptied = [
+        row
+        for row in affected
+        if tuple(row[c] for c in partition_by) not in remaining
+    ]
+    if emptied:
+        # Locate the stale dirs through Spark's OWN partition parsing:
+        # hand-building `col=value` names breaks on Hive-escaped
+        # characters (a timestamp's ':' becomes %3A on disk) and NULL
+        # values (__HIVE_DEFAULT_PARTITION__), leaving the stale dir
+        # alive and the table returning duplicate keys. Reading the
+        # emptied-partition predicate back and collecting
+        # input_file_name() yields the real directory names for any
+        # value type, escaped or not; the collect is file-count bounded
+        # over only the emptied partitions.
+        stale_files = (
+            _read_typed(spark, target_path, merged, partition_by)
+            .filter(_partitions_predicate(emptied, partition_by))
+            .select(F.input_file_name().alias("f"))
+            .distinct()
+            .collect()
         )
-        # Dynamic overwrite replaces ONLY the partition dirs present in
-        # the staged data; untouched partitions keep their files.
-        (
-            staged.write.format("parquet")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .save(target_path)
-        )
-        # An affected partition can end up EMPTY (every key moved to a
-        # new partition value); dynamic overwrite never sees it, so the
-        # stale dir must be dropped explicitly.
-        remaining = {
-            tuple(row[c] for c in partition_by)
-            for row in staged.select(*partition_by).distinct().collect()
-        }
-        emptied = [
-            row
-            for row in affected
-            if tuple(row[c] for c in partition_by) not in remaining
-        ]
-        if emptied:
-            # Locate the stale dirs through Spark's OWN partition
-            # parsing: hand-building `col=value` names breaks on
-            # Hive-escaped characters (a timestamp's ':' becomes %3A
-            # on disk) and NULL values (__HIVE_DEFAULT_PARTITION__),
-            # leaving the stale dir alive and the table returning
-            # duplicate keys. Reading the emptied-partition predicate
-            # back and collecting input_file_name() yields the real
-            # directory names for any value type, escaped or not; the
-            # collect is file-count bounded over only the emptied
-            # partitions.
-            spark.catalog.refreshByPath(target_path)
-            pred = None
-            for row in emptied:
-                clause = None
-                for c in partition_by:
-                    eq = F.col(c).eqNullSafe(F.lit(row[c]))
-                    clause = eq if clause is None else clause & eq
-                pred = clause if pred is None else pred | clause
-            stale_files = (
-                _read_typed(spark, target_path, merged, partition_by)
-                .filter(pred)
-                .select(F.input_file_name().alias("f"))
-                .distinct()
-                .collect()
-            )
-            # input_file_name() URL-encodes path components (the
-            # on-disk 'pt=... 10%3A00%3A00' arrives as '%2010%253A...')
-            # and Hadoop Path does NOT decode — unquote once to get
-            # the real on-disk name (verified: fs.exists is False on
-            # the encoded form).
-            from urllib.parse import unquote
+        # input_file_name() URL-encodes path components (the on-disk
+        # 'pt=... 10%3A00%3A00' arrives as '%2010%253A...') and Hadoop
+        # Path does NOT decode — unquote once to get the real on-disk
+        # name (verified: fs.exists is False on the encoded form).
+        from urllib.parse import unquote
 
-            stale_dirs = {
-                unquote(r["f"]).rsplit("/", 1)[0] for r in stale_files
-            }
-            fs, jvm = hadoop_fs(spark, target_path)
-            for d in stale_dirs:
-                p = jvm.org.apache.hadoop.fs.Path(d)
-                if fs.exists(p):
-                    fs.delete(p, True)
-    else:
-        # Full rewrite — but NEVER silently drop the table's partition
-        # layout: losing partitionBy here would disable partition
-        # pruning, the isin() pruned scans in incremental_fact_update,
-        # and per-partition compaction for every later reader (ADVICE
-        # r2). Repartition first so tasks hold whole partition values.
-        out = merged
-        if partition_by:
-            out = out.repartition(*[F.col(c) for c in partition_by])
-        w = out.write.format("parquet").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(staging)
-        w2 = (
-            _cast_to_schema(
-                _read_typed(spark, staging, merged, partition_by),
-                merged.schema,
-            )
-            .write.format("parquet")
-            .mode("overwrite")
-        )
-        if partition_by:
-            w2 = w2.partitionBy(*partition_by)
-        w2.save(target_path)
-    # Drop the staging dir — otherwise every upsert leaves a full copy
-    # of the merged partitions on disk.
-    fs, jvm = hadoop_fs(spark, staging)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    spark.catalog.refreshByPath(target_path)
+        stale_dirs = {unquote(r["f"]).rsplit("/", 1)[0] for r in stale_files}
+        fs, jvm = hadoop_fs(spark, target_path)
+        for d in stale_dirs:
+            p = jvm.org.apache.hadoop.fs.Path(d)
+            if fs.exists(p):
+                fs.delete(p, True)
+        spark.catalog.refreshByPath(target_path)
 
 
 def replace_lake_rows(
@@ -655,11 +679,8 @@ def replace_lake_rows(
     the target's partition layout through the rewrite (without it the
     staged overwrite would silently flatten a partitioned table and
     disable pruning for every later reader)."""
-    try:
-        existing = read_lake_table(spark, path)
-    except Exception as exc:
-        if not _is_missing_path(exc, path):
-            raise  # transient/corrupt reads are NOT "first run"
+    existing = read_existing_table(spark, path)
+    if existing is None:
         write_lake_table(df, path, mode="overwrite", partition_by=partition_by)
         return
     if lake_format() == "delta":
@@ -684,26 +705,7 @@ def replace_lake_rows(
         existing = _read_typed(spark, path, df, partition_by)
     kept = existing.filter(~_key_in_values(key_col, values))
     merged = kept.unionByName(df, allowMissingColumns=True)
-    staging = path.rstrip("/") + "__staging"
-    if partition_by:
-        merged = merged.repartition(*[F.col(c) for c in partition_by])
-    w = merged.write.format("parquet").mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(staging)
-    w2 = (
-        _cast_to_schema(
-            _read_typed(spark, staging, merged, partition_by), merged.schema
-        )
-        .write.format("parquet")
-        .mode("overwrite")
-    )
-    if partition_by:
-        w2 = w2.partitionBy(*partition_by)
-    w2.save(path)
-    fs, jvm = hadoop_fs(spark, staging)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    spark.catalog.refreshByPath(path)
+    _staged_overwrite(spark, merged, path, partition_by)
 
 
 def optimize_lake_table(
@@ -808,7 +810,7 @@ def vacuum_lake_table(spark: SparkSession, path: str, retention_hours: int = 168
     base = path.rstrip("/")
     cutoff_ms = int((_time.time() - retention_hours * 3600) * 1000)
     deleted = False
-    for suffix in ("__staging", "__compact"):
+    for suffix in (_STAGING_SUFFIX, "__compact"):
         p = jvm.org.apache.hadoop.fs.Path(base + suffix)
         if fs.exists(p) and fs.getFileStatus(p).getModificationTime() < cutoff_ms:
             fs.delete(p, True)
@@ -820,7 +822,7 @@ def vacuum_lake_table(spark: SparkSession, path: str, retention_hours: int = 168
             name = st.getPath().getName()
             if (
                 st.isDirectory()
-                and (name.endswith("__staging") or name.endswith("__compact"))
+                and name.endswith((_STAGING_SUFFIX, "__compact"))
                 and st.getModificationTime() < cutoff_ms
             ):
                 fs.delete(st.getPath(), True)
@@ -915,11 +917,10 @@ def scd2_upsert(
         F.lit(None).cast("timestamp").alias("effective_to"),
         F.lit(True).alias("is_current"),
     )
-    try:
-        existing = spark.read.parquet(target_path)
-    except Exception as exc:
-        if not _is_missing_path(exc, target_path):
-            raise  # transient/corrupt reads are NOT "first run"
+    existing = read_existing_table(
+        spark, target_path, read=lambda s, p: s.read.parquet(p)
+    )
+    if existing is None:
         # Bootstrap writes PARQUET explicitly: this operator reads and
         # rewrites raw parquet on every subsequent run, so a
         # write_lake_table bootstrap (format-aware → Delta when
@@ -930,10 +931,7 @@ def scd2_upsert(
         out = incoming
         if partition_by:
             out = out.repartition(*[F.col(c) for c in partition_by])
-        w = out.write.format("parquet").mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.save(target_path)
+        _parquet_overwrite(out, partition_by).save(target_path)
         spark.catalog.refreshByPath(target_path)
         return
     if partition_by:
@@ -996,26 +994,7 @@ def scd2_upsert(
         .unionByName(closed)
         .unionByName(new_rows.select(*existing.columns))
     )
-    staging = target_path.rstrip("/") + "__staging"
-    if partition_by:
-        result = result.repartition(*[F.col(c) for c in partition_by])
-    w = result.write.format("parquet").mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.save(staging)
-    w2 = (
-        _cast_to_schema(
-            _read_typed(spark, staging, result, partition_by), result.schema
-        )
-        .write.format("parquet")
-        .mode("overwrite")
-    )
-    if partition_by:
-        w2 = w2.partitionBy(*partition_by)
-    w2.save(target_path)
-    fs, jvm = hadoop_fs(spark, staging)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
-    spark.catalog.refreshByPath(target_path)
+    _staged_overwrite(spark, result, target_path, partition_by)
 
 
 def snapshot_diff(

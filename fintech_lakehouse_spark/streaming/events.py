@@ -712,8 +712,7 @@ def foreach_batch_cdf(
     property-tested in tests/test_property_based.py); the streaming
     test pins it end-to-end."""
     from fintech_lakehouse_spark.sources.writers import (
-        _is_missing_path,
-        read_lake_table,
+        read_existing_table,
         snapshot_diff,
         upsert_lake_table,
     )
@@ -742,14 +741,18 @@ def foreach_batch_cdf(
                 .drop("_rn")
             )
         compare_cols = [c for c in latest.columns if c != key]
-        try:
-            # format-aware read: the target is maintained by
-            # upsert_lake_table, which MERGEs through Delta when
-            # delta-spark is installed. A raw parquet read of a Delta
-            # table also sees superseded (tombstoned) data files —
-            # multiple rows per key in old_slice, phantom updates in
-            # the diff, replay guarantee broken (ADVICE r5 medium #1).
-            old = read_lake_table(spark, target_path)
+        # format-aware read: the target is maintained by
+        # upsert_lake_table, which MERGEs through Delta when
+        # delta-spark is installed. A raw parquet read of a Delta
+        # table also sees superseded (tombstoned) data files —
+        # multiple rows per key in old_slice, phantom updates in the
+        # diff, replay guarantee broken (ADVICE r5 medium #1).
+        old = read_existing_table(spark, target_path)
+        if old is None:
+            changelog = latest.select(
+                key, *compare_cols, F.lit("insert").alias("_change_type")
+            )
+        else:
             old_slice = old.join(
                 latest.select(key).distinct(), key, "left_semi"
             )
@@ -759,12 +762,6 @@ def foreach_batch_cdf(
             # maintenance (foreach_batch_ivm / operators/ivm.py).
             changelog = snapshot_diff(
                 old_slice, latest, keys=[key], emit_preimage=emit_preimage
-            )
-        except Exception as exc:
-            if not _is_missing_path(exc, target_path):
-                raise
-            changelog = latest.select(
-                key, *compare_cols, F.lit("insert").alias("_change_type")
             )
         # the write MATERIALIZES the diff before the upsert below
         # rewrites the target it reads from. Retry idempotency

@@ -76,7 +76,7 @@ def main() -> None:
         "half wrong: their consumers exchange on different keys, so the",
         "shingle derivation recomputed per consumer until r6b inserted one",
         "explicit repartition on the shingle/gram column for every consumer",
-        "to reuse (scripts/ab_ngram_reuse.py: 7.1 s → 3.0 s at sf0.1, and the",
+        "to reuse (BASELINE.md §2 Round-6b: 7.1 s → 3.0 s at sf0.1, and the",
         "16× corpus curve bends from 10.5× to 5.2× wall — BASELINE.md §2/§3",
         "r6b). Multi-consumer repartitions of this kind show up below as one",
         "extra shuffle; that shuffle is the materialization point the",

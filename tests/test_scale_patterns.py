@@ -170,6 +170,31 @@ def test_plan_shapes(spark, sf_dir, query, required):
         assert fragment in plan, f"{query}: missing {fragment}\n{plan[:2000]}"
 
 
+def _assert_only_documents_spread(spark, sf_dir, plan: str) -> None:
+    """The plan's exchanges are EXACTLY load_table's conditional scan
+    spread of the documents table: one or more hashpartitioning(doc_id)
+    exchanges when its file layout yields fewer scan splits than
+    cores, and none at all otherwise (e.g. on a 1-core runner)."""
+    import re
+
+    from fintech_lakehouse_spark.sources.readers import _estimate_scan_splits
+
+    exchanges = re.findall(
+        r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]\n"
+        r"Arguments: (\w+partitioning)\(([^,)]*)",
+        plan,
+    )
+    splits = _estimate_scan_splits(spark, f"{sf_dir}/documents.parquet")
+    if splits < spark.sparkContext.defaultParallelism:
+        assert exchanges, plan[:2000]
+        assert all(
+            part == "hashpartitioning" and col.startswith("doc_id")
+            for part, col in exchanges
+        ), plan[:2000]
+    else:
+        assert not exchanges, plan[:2000]
+
+
 def test_repetition_scores_zero_shuffle(spark, sf_dir):
     """doc_repetition_scores promises a pure scan: every histogram max
     is an in-row fold — a flat map over a 100 TB corpus. r16: the
@@ -178,19 +203,37 @@ def test_repetition_scores_zero_shuffle(spark, sf_dir):
     one hashpartitioning(doc_id) exchange that fans the serial scan
     across cores — it vanishes when the layout yields >= cores splits.
     Any other exchange is still a regression."""
-    import re
-
     plan = _plan(QUERIES["doc_repetition_scores"](spark, sf_dir))
-    exchanges = re.findall(
-        r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]\n"
-        r"Arguments: (\w+partitioning)\(([^,)]*)",
-        plan,
+    _assert_only_documents_spread(spark, sf_dir, plan)
+
+
+def test_scan_split_estimate_follows_session_conf(spark, sf_dir):
+    """The spread decision's split estimate reads
+    spark.sql.files.maxPartitionBytes from the session (unit strings
+    like '1m' included): a lower split size raises the estimate that
+    load_table caches. The estimate is cached per (path, mtime), so
+    the schema catalog is reset around the conf change."""
+    from fintech_lakehouse_spark.sources.readers import (
+        _SCHEMA_CATALOG,
+        reset_table_schema_catalog,
     )
-    assert exchanges, plan[:2000]  # the spread fires on the test lake
-    assert all(
-        part == "hashpartitioning" and col.startswith("doc_id")
-        for part, col in exchanges
-    ), plan[:2000]
+
+    path = f"{sf_dir}/documents.parquet"
+
+    def cached_splits() -> int:
+        reset_table_schema_catalog()
+        load_table(spark, sf_dir, "documents")
+        return next(v[1] for k, v in _SCHEMA_CATALOG.items() if k[0] == path)
+
+    conf_key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(conf_key)
+    default = cached_splits()
+    spark.conf.set(conf_key, "1m")
+    try:
+        assert cached_splits() > default
+    finally:
+        spark.conf.set(conf_key, before)
+        reset_table_schema_catalog()
 
 
 def test_column_pruning(spark, sf_dir):
@@ -563,19 +606,8 @@ def test_winnowing_zero_shuffle(spark, sf_dir):
     spread, so EXACTLY the one hashpartitioning(doc_id) exchange may
     appear (it vanishes when the layout yields >= cores splits); any
     other exchange is a regression."""
-    import re
-
     plan = _plan(QUERIES["winnowing_fingerprints"](spark, sf_dir))
-    exchanges = re.findall(
-        r"\(\d+\) Exchange\nInput \[\d+\]: \[[^\]]*\]\n"
-        r"Arguments: (\w+partitioning)\(([^,)]*)",
-        plan,
-    )
-    assert exchanges, plan[:2000]  # the spread fires on the test lake
-    assert all(
-        part == "hashpartitioning" and col.startswith("doc_id")
-        for part, col in exchanges
-    ), plan[:2000]
+    _assert_only_documents_spread(spark, sf_dir, plan)
     # the Python boundary sees only the two columns it needs (§4.1)
     assert "MapInArrow" in plan, plan[:2000]
 

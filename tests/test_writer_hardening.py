@@ -333,6 +333,88 @@ def test_scd2_upsert_partition_by_threads_through(spark, tmp_path):
     assert len(closed) == 1 and closed[0]["tier"] == "gold"
 
 
+@pytest.mark.parametrize(
+    "op", ["upsert_selective", "upsert_full", "replace", "scd2"]
+)
+def test_staged_rewrite_keeps_staging_until_copy_succeeds(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every staged parquet rewrite deletes ``<path>__staging`` once
+    its copy into the target succeeded — no working dir is left behind
+    — and keeps it, holding the merged rows, when that copy fails: the
+    delete runs only after a successful overwrite, never in a finally."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "t")
+    staging = path + "__staging"
+    if op == "scd2":
+        ts = datetime.datetime
+
+        def rows(*r):
+            return spark.createDataFrame(
+                list(r), "id string, tier string, effective_ts timestamp"
+            )
+
+        def apply(df):
+            scd2_upsert(spark, df, path, key="id", tracked_cols=["tier"])
+
+        batches = [
+            rows(("c1", "gold", ts(2024, 1, 1))),
+            rows(("c1", "platinum", ts(2024, 2, 1))),
+            rows(("c1", "silver", ts(2024, 3, 1))),
+        ]
+        cols = ["id", "tier"]
+        # closed gold + closed platinum + the new current silver row
+        expected = {("c1", "gold"), ("c1", "platinum"), ("c1", "silver")}
+    else:
+
+        def rows(*r):
+            return spark.createDataFrame(list(r), "id long, v string, d string")
+
+        def apply(df):
+            if op == "replace":
+                ids = [r["id"] for r in df.select("id").collect()]
+                replace_lake_rows(spark, df, path, key_col="id", values=ids)
+            else:
+                upsert_lake_table(
+                    spark, df, path, merge_keys=["id"],
+                    partition_by=["d"] if op == "upsert_selective" else None,
+                )
+
+        batches = [
+            rows((1, "a", "x"), (2, "b", "y")),
+            rows((2, "B", "y")),
+            rows((1, "A", "x")),
+        ]
+        cols = ["id", "v", "d"]
+        # the selective upsert stages only the touched partition
+        expected = (
+            {(1, "A", "x")}
+            if op == "upsert_selective"
+            else {(1, "A", "x"), (2, "B", "y")}
+        )
+
+    apply(batches[0])  # first run: plain write, no staging
+    apply(batches[1])  # staged rewrite
+    assert not os.path.exists(staging)
+
+    orig_save = DataFrameWriter.save
+
+    def failing_save(self, target=None, *a, **kw):
+        if target == path:
+            raise RuntimeError("copy into target failed")
+        return orig_save(self, target, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "save", failing_save)
+    with pytest.raises(RuntimeError, match="copy into target failed"):
+        apply(batches[2])
+    monkeypatch.undo()
+    staged = spark.read.parquet(staging).select(*cols).collect()
+    assert {tuple(r) for r in staged} == expected
+
+
 # ------------------------------------------------------------- dedup_clusters
 
 
