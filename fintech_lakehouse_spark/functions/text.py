@@ -60,11 +60,13 @@ def drop_hot_keys(rows: DataFrame, key: str, max_df: int) -> DataFrame:
     DuckDB oracle says COUNT(DISTINCT doc_id) rely on per-doc
     distinctness of the exploded rows (word_shingles/winnow_selected
     return distinct arrays) — pinned by tests/test_scale_patterns.py::
-    test_hot_count_rewrite_distinctness_premise."""
+    test_hot_count_rewrite_distinctness_premise. NULL keys pass through
+    unchanged, as they did through the anti join: count(key) skips
+    NULLs, so the NULL group's df is 0."""
     from pyspark.sql.window import Window as _W
 
     return (
-        rows.withColumn("_df", F.count(F.lit(1)).over(_W.partitionBy(key)))
+        rows.withColumn("_df", F.count(key).over(_W.partitionBy(key)))
         .filter(F.col("_df") <= max_df)
         .drop("_df")
     )

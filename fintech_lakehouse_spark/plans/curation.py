@@ -221,19 +221,6 @@ def winnowing_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WINNOW_PAIRS_CACHE: dict[tuple, tuple] = {}
 
-# Right-sizing constant for the cached pair view (r16, guide
-# §2.2/§2.6): rows per partition of the coalesced consumer view. The
-# cached aggregate keeps spark.sql.shuffle.partitions partitions
-# (cached plans are exempt from AQE partition coalescing —
-# spark.sql.optimizer.canChangeCachedPlanOutputPartitioning defaults
-# false), so at bench scale 280 pair rows sat in 32 partitions and
-# every downstream exchange of every graph consumer scheduled 32–64
-# near-empty map tasks. coalesce() below is narrow (never a shuffle)
-# and can only REDUCE the partition count, so at production scale —
-# where pairs/PAIRS_PER_PARTITION exceeds the cached partitioning —
-# it is a no-op and the full parallelism is kept.
-PAIRS_PER_PARTITION = 65_536
-
 
 def winnowing_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The winnowing candidate-pair table, materialized ONCE per
@@ -248,34 +235,29 @@ def winnowing_pairs_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumer at it". reset_stage_caches() clears it (bench cold-run
     protocol); production sessions keep the amortization.
 
-    Consumers receive a size-coalesced VIEW of the cache (r16): the
-    materialized count picks ceil(n / PAIRS_PER_PARTITION) partitions,
-    clamped to the cached partitioning, so a few-hundred-edge dup
-    graph iterates over 1 partition instead of 32 (VERDICT r15 item 2:
-    pagerank ran FASTER on 8 cores than 32 — per-task scheduling
-    overhead exceeded the per-partition work on every tail
-    exchange)."""
+    The cache is sized by AQE like any other shuffle output
+    (session.py sets canChangeCachedPlanOutputPartitioning), so a
+    few-hundred-edge dup graph is read as a handful of partitions
+    rather than spark.sql.shuffle.partitions near-empty ones."""
     key = (id(spark), sf_dir)
     hit = _WINNOW_PAIRS_CACHE.get(key)
     if hit is not None:
-        return hit[2]
+        return hit[1]
     pairs = (
         winnowing_candidate_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
         .cache()
     )
-    n = pairs.count()  # materialize before consumers branch
-    target = max(1, min(pairs.rdd.getNumPartitions(), -(-n // PAIRS_PER_PARTITION)))
-    view = pairs.coalesce(target)
-    _WINNOW_PAIRS_CACHE[key] = (spark, pairs, view)
-    return view
+    pairs.count()  # materialize before consumers branch
+    _WINNOW_PAIRS_CACHE[key] = (spark, pairs)
+    return pairs
 
 
 def reset_winnow_pairs_cache() -> None:
     """Unpersist and drop the per-snapshot winnowing pair tables
     (called by plans.text.reset_stage_caches — the one cold-run
     reset entry point)."""
-    for _, pairs, _view in _WINNOW_PAIRS_CACHE.values():
+    for _, pairs in _WINNOW_PAIRS_CACHE.values():
         try:
             pairs.unpersist()
         except Exception:

@@ -58,6 +58,33 @@ def test_dense_surrogate_key_dense_and_ordered(spark):
     assert [r["k"] for r in out] == ["a", "b", "c", "d"]  # natural-key order
 
 
+def test_cached_dim_is_coalesced_and_keys_stay_dense(spark):
+    """session.py lets AQE coalesce the last shuffle of a persisted
+    plan (canChangeCachedPlanOutputPartitioning). Without it a cached
+    ~1k-row dim keeps spark.sql.shuffle.partitions partitions and
+    every consumer schedules that many tasks. Pinned at the production
+    default of 200, so a Spark upgrade or a conf edit that brings the
+    exemption back fails here; the dense key must not move either."""
+    from fintech_lakehouse_spark.operators.gold import build_dim_customer
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    dim = None
+    try:
+        customers = spark.range(1000).selectExpr(
+            "format_string('C%05d', (id * 7919) % 1000) AS customer_id", "id AS x"
+        )
+        dim = build_dim_customer(customers).persist()
+        assert dim.count() == 1000
+        assert dim.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+        rows = sorted(dim.select("customer_id", "customer_sk").collect())
+        assert [r["customer_sk"] for r in rows] == list(range(1, 1001))
+    finally:
+        if dim is not None:
+            dim.unpersist()
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 def test_standardize_strings(spark):
     df = spark.createDataFrame([("  usd ", "x"), ("eur", "y")], ["cur", "other"])
     out = standardize_string_columns(df, ["cur", "missing_col"]).collect()

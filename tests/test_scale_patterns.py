@@ -1347,3 +1347,33 @@ def test_hot_count_rewrite_distinctness_premise(spark, sf_dir):
         "doc_id", F.explode("selected").alias("fp")
     )
     assert fps.count() == fps.distinct().count()
+
+
+def test_drop_hot_keys_passes_null_keys_through(spark):
+    """ADVICE r16: drop_hot_keys keeps the anti-join contract it
+    replaced — rows with a NULL key are never dropped, even when the
+    NULL group is larger than max_df; a hot non-NULL key still is."""
+    from fintech_lakehouse_spark.functions.text import drop_hot_keys
+
+    rows = spark.range(20).selectExpr(
+        "id AS doc_id",
+        "CASE WHEN id < 8 THEN NULL WHEN id < 16 THEN 'hot' ELSE CAST(id AS STRING) END AS g",
+    )
+    kept = drop_hot_keys(rows, "g", 3)
+    assert kept.columns == ["doc_id", "g"]
+    assert sorted(r["doc_id"] for r in kept.collect()) == [*range(8), 16, 17, 18, 19]
+
+
+def test_ivf_argmin_fold_evaluated_once(spark, sf_dir):
+    """ADVICE r16: ivf_assign_fixed's nondeterministic guard keeps the
+    16-centroid argmin fold out of the isnotnull(list_id) filter every
+    downstream equi-join infers. Pin it on the optimized plan of
+    ivf_approx_neighbors: array_min appears exactly once, and in no
+    Filter — an optimizer change that substitutes the projection into
+    the inferred filter again fails here."""
+    df = QUERIES["ivf_approx_neighbors"](spark, sf_dir)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("array_min(") == 1, plan[:3000]
+    assert not any(
+        "Filter " in ln and "array_min(" in ln for ln in plan.splitlines()
+    ), plan[:3000]
