@@ -4,7 +4,7 @@ dataclasses instead of module inheritance."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Business rules (ref: src/config/base.py:19-50)
 MIN_TRANSACTION_AMOUNT = 0.01
@@ -49,24 +49,9 @@ class EngineConfig:
     env: str = "dev"
     base_path: str = "/tmp/fintech_lakehouse"
     dq_fail_on_critical: bool = False  # dev.py:48 / prod.py:50
-    enable_optimization: bool = False  # dev.py:61 / prod.py:64
-    batch_size: int = 10_000  # dev.py:60 / prod.py:63
-    # Writer parallelism for date-partitioned facts: 1 minimizes file
-    # count (small lakes); raise when rows-per-date is large relative
-    # to executor count (5x write throughput at 10M rows/90 dates
-    # with 8 - see BASELINE.md §3).
-    fact_files_per_partition: int = 1
-    checkpoint_path: str = field(default="")
-
-    def __post_init__(self) -> None:
-        if not self.checkpoint_path:
-            self.checkpoint_path = f"{self.base_path}/_checkpoints"
 
     def layer_path(self, layer: str, table: str) -> str:
         return f"{self.base_path}/{layer}/{table}"
-
-    def database(self, layer: str) -> str:
-        return f"fintech_{layer}_{self.env}"
 
 
 def dev_config(base_path: str = "/tmp/fintech_lakehouse_dev") -> EngineConfig:
@@ -78,6 +63,4 @@ def prod_config(base_path: str) -> EngineConfig:
         env="prod",
         base_path=base_path,
         dq_fail_on_critical=True,
-        enable_optimization=True,
-        batch_size=100_000,
     )

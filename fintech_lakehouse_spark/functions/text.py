@@ -503,6 +503,16 @@ def winnow_selected(
     ).mapInArrow(arrow_fn, "doc_id long, n_grams long, selected array<long>")
 
 
+def _list_offsets(sizes):
+    """int32 Arrow list offsets for per-row list ``sizes``, summed in
+    int64: past 2^31 - 1 values the int32 conversion raises
+    ArrowInvalid instead of wrapping to negative offsets."""
+    import numpy as np
+    import pyarrow as pa
+
+    return pa.array(np.cumsum([0, *sizes], dtype=np.int64), type=pa.int32())
+
+
 def _winnow_batches(k: int, w: int, text_col: str):
     """Arrow-batch winnowing kernel factory (executor-side body of
     :func:`winnow_selected`). Per document: split on single spaces
@@ -532,13 +542,12 @@ def _winnow_batches(k: int, w: int, text_col: str):
             texts = batch.column(text_col).to_pylist()
             n_rows = len(texts)
             n_grams = np.zeros(n_rows, dtype=np.int64)
-            offsets = np.zeros(n_rows + 1, dtype=np.int32)
+            sizes = np.zeros(n_rows, dtype=np.int64)
             sel_parts = []
             for r, t in enumerate(texts):
                 toks = t.split(" ") if t is not None else []
                 ng = len(toks) - k + 1
                 if ng <= 0:
-                    offsets[r + 1] = offsets[r]
                     continue
                 hs = np.fromiter(
                     (
@@ -557,7 +566,7 @@ def _winnow_batches(k: int, w: int, text_col: str):
                 else:
                     sel = hs.min(keepdims=True)
                 sel_parts.append(sel)
-                offsets[r + 1] = offsets[r] + sel.size
+                sizes[r] = sel.size
             values = (
                 np.concatenate(sel_parts)
                 if sel_parts
@@ -568,8 +577,7 @@ def _winnow_batches(k: int, w: int, text_col: str):
                     batch.column("doc_id"),
                     pa.array(n_grams),
                     pa.ListArray.from_arrays(
-                        pa.array(offsets, type=pa.int32()),
-                        pa.array(values, type=pa.int64()),
+                        _list_offsets(sizes), pa.array(values, type=pa.int64())
                     ),
                 ],
                 schema=out_schema,

@@ -112,7 +112,7 @@ class MedallionPipeline:
         (SURVEY §3.3)."""
         self.monitor.start_stage(f"silver_{table}")
         # persist: the cast/derive/tag chain otherwise re-executes for
-        # the DQ run, BOTH split writes and BOTH counts (~5 full scans)
+        # the DQ run and BOTH split writes
         typed = add_processing_metadata(bronze_to_silver(bronze, table)).persist()
         checker = (
             self._transaction_checker(typed)
@@ -138,19 +138,17 @@ class MedallionPipeline:
             valid,
             self.config.layer_path("silver", table),
             partition_by=partition,
-            files_per_partition=self.config.fact_files_per_partition,
         )
-        n_invalid = invalid.count()
+        n_invalid = report.quarantined_records
         if n_invalid:
             write_lake_table(
                 invalid, self.config.layer_path("quarantine", table)
             )
-        n_valid = valid.count()
         typed.unpersist()
         self.monitor.end_stage(
             f"silver_{table}",
-            rows_read=n_valid + n_invalid,
-            rows_written=n_valid,
+            rows_read=report.total_records,
+            rows_written=report.total_records - n_invalid,
             rows_quarantined=n_invalid,
         )
         return read_lake_table(self.spark, self.config.layer_path("silver", table))
@@ -189,7 +187,6 @@ class MedallionPipeline:
                 df,
                 self.config.layer_path("gold", name),
                 partition_by=partition,
-                files_per_partition=self.config.fact_files_per_partition,
             )
         for df in (fact, dim_customer, dim_merchant):
             df.unpersist()

@@ -69,6 +69,8 @@ class DQReport:
 
     table_name: str
     results: list[DQCheckResult] = field(default_factory=list)
+    total_records: int = 0
+    quarantined_records: int = 0  # rows failing >= 1 row check
 
     @property
     def passed(self) -> bool:
@@ -352,13 +354,16 @@ class DataQualityChecker:
     def run(self) -> DQReport:
         """Execute all checks in ONE Spark job: every row-predicate
         check is a conditional sum and every uniqueness check a
-        countDistinct in the SAME single-scan aggregate (SURVEY §4.1).
+        countDistinct in the SAME single-scan aggregate (SURVEY §4.1),
+        together with the total and the quarantined-row count.
         Catalyst plans the mixed distinct/non-distinct aggregate with
         one Expand, so N primary-key checks no longer cost N extra
         jobs (the reference runs two jobs per check,
         data_quality.py:544-547)."""
-        report = DQReport(table_name=self.table_name)
-        aggs = [F.count(F.lit(1)).alias("_dq_total")]
+        aggs = [
+            F.count(F.lit(1)).alias("_dq_total"),
+            F.count_if(F.size(self._failure_reasons()) > 0).alias("_dq_quarantined"),
+        ]
         for i, check in enumerate(self._row_checks):
             aggs.append(
                 F.sum(F.when(check.condition, 1).otherwise(0)).alias(f"_dq_{i}")
@@ -375,6 +380,11 @@ class DataQualityChecker:
             )
         row = self.df.agg(*aggs).collect()[0]
         total = row["_dq_total"]
+        report = DQReport(
+            table_name=self.table_name,
+            total_records=total,
+            quarantined_records=int(row["_dq_quarantined"] or 0),
+        )
         for i, check in enumerate(self._row_checks):
             failed = int(row[f"_dq_{i}"] or 0)
             pass_rate = 1.0 if total == 0 else 1.0 - failed / total
@@ -407,6 +417,17 @@ class DataQualityChecker:
             )
         return report
 
+    def _failure_reasons(self) -> Column:
+        """The reasons of every row check a row fails (empty array when
+        it passes): run()'s quarantine count and the split share it."""
+        reason_cols = [
+            F.when(check.condition, F.lit(check.failure_reason))
+            for check in self._row_checks
+        ]
+        if not reason_cols:
+            return F.array().cast("array<string>")
+        return F.array_compact(F.array(*reason_cols))
+
     def get_valid_invalid_dfs(self) -> tuple[DataFrame, DataFrame]:
         """Q7 (ref: src/utils/data_quality.py:570-634): tag every row
         with the reasons of the row checks it fails, split on "no
@@ -414,18 +435,7 @@ class DataQualityChecker:
         adds ``_validation_failures`` (array) and
         ``_quarantine_timestamp`` — the quarantine write contract
         (SURVEY §2.1 S11). Single scan, two filters."""
-        reason_cols = [
-            F.when(check.condition, F.lit(check.failure_reason)).otherwise(
-                F.lit(None)
-            )
-            for check in self._row_checks
-        ]
-        tagged = self.df.withColumn(
-            "_validation_failures",
-            F.array_compact(F.array(*reason_cols))
-            if reason_cols
-            else F.array().cast("array<string>"),
-        )
+        tagged = self.df.withColumn("_validation_failures", self._failure_reasons())
         helper_cols = [c for c in tagged.columns if c.startswith("_dq_")]
         valid = tagged.filter(F.size("_validation_failures") == 0).drop(
             "_validation_failures", *helper_cols

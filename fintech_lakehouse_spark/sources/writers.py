@@ -226,6 +226,32 @@ def _parquet_overwrite(df: DataFrame, partition_by: list[str] | None):
     return w.partitionBy(*partition_by) if partition_by else w
 
 
+def _shape_for_write(
+    df: DataFrame,
+    partition_by: list[str] | None,
+    cluster_by: list[str] | None = None,
+) -> DataFrame:
+    """The one shuffle before every partitioned or clustered lake
+    write, so output tasks hold whole partition values (otherwise every
+    input task writes a file into every partition dir — measured 4×
+    wall on the gold fact write).
+
+    ``cluster_by``: range-repartition + sort on the partition columns,
+    then the cluster columns. ``partition_by`` alone: Spark's REBALANCE
+    hint — AQE coalesces light values into whole-value tasks and splits
+    a value only past ``spark.sql.adaptive.advisoryPartitionSizeInBytes``.
+    It hashes the partition columns only, so a retried task reproduces
+    its rows."""
+    if cluster_by:
+        range_cols = [F.col(c) for c in [*(partition_by or []), *cluster_by]]
+        return df.repartitionByRange(*range_cols).sortWithinPartitions(
+            *range_cols
+        )
+    if partition_by:
+        return df.hint("rebalance", *partition_by)
+    return df
+
+
 def _staged_overwrite(
     spark: SparkSession,
     frame: DataFrame,
@@ -235,8 +261,8 @@ def _staged_overwrite(
 ) -> set[tuple] | None:
     """Overwrite ``path`` with ``frame`` through ``<path>__staging``:
     parquet can't overwrite a path the frame still reads from, so the
-    frame is written to the sibling staging dir first (repartitioned so
-    tasks hold whole partition values), read back with ``frame``'s
+    frame is written to the sibling staging dir first (shaped by
+    :func:`_shape_for_write`), read back with ``frame``'s
     exact types and copied over the target. ``dynamic`` replaces ONLY
     the partition dirs present in the copy (untouched partitions keep
     their files) and returns the partition values it wrote, collected
@@ -246,9 +272,7 @@ def _staged_overwrite(
     copy fails, the staged rows survive for recovery (and for
     vacuum_lake_table) instead of leaving no copy at all."""
     staging = path.rstrip("/") + _STAGING_SUFFIX
-    out = frame
-    if partition_by:
-        out = out.repartition(*[F.col(c) for c in partition_by])
+    out = _shape_for_write(frame, partition_by)
     _parquet_overwrite(out, partition_by).save(staging)
     staged = _cast_to_schema(
         _read_typed(spark, staging, frame, partition_by), frame.schema
@@ -290,7 +314,6 @@ def write_lake_table(
     merge_schema: bool = True,
     cluster_by: list[str] | None = None,
     compression: str | None = None,
-    files_per_partition: int = 1,
 ) -> None:
     """Partitioned lake write (ref: src/utils/spark_utils.py:203-245).
 
@@ -305,6 +328,7 @@ def write_lake_table(
 
     ``compression``: parquet codec (e.g. "zstd" for cold data,
     "snappy" default for hot)."""
+    df = _shape_for_write(df, partition_by, cluster_by)
     if lake_format() != "delta":
         from fintech_lakehouse_spark.sources.deltalog import (
             has_delta_log,
@@ -315,18 +339,12 @@ def write_lake_table(
             # r10: a REAL Delta table must be written THROUGH its log —
             # a bare parquet write leaves the log stale (appends
             # invisible to the replay) or broken (overwrite deletes
-            # files live versions still reference). Clustering shuffles
-            # still apply; the commit stages the shaped frame.
+            # files live versions still reference). The commit stages
+            # the shaped frame.
             if mode not in ("append", "overwrite"):
                 raise NotImplementedError(
                     f"write mode {mode!r} on a Delta-log table without "
                     "delta-spark — append/overwrite only"
-                )
-            if cluster_by:
-                range_cols = [*(partition_by or []), *cluster_by]
-                df = df.repartitionByRange(*[F.col(c) for c in range_cols])
-                df = df.sortWithinPartitions(
-                    *[F.col(c) for c in range_cols]
                 )
             write_delta_commit(
                 df.sparkSession, df, path, mode=mode,
@@ -334,25 +352,6 @@ def write_lake_table(
             )
             df.sparkSession.catalog.refreshByPath(path)
             return
-    if cluster_by:
-        # When the table is ALSO partitioned, the range partitioning
-        # must lead with the partition columns or every output task
-        # spans many partition values and partitionBy() writes a file
-        # per (task, value) pair — the same tasks x values small-file
-        # explosion the elif branch below exists to prevent.
-        range_cols = [*(partition_by or []), *cluster_by]
-        df = df.repartitionByRange(*[F.col(c) for c in range_cols])
-        df = df.sortWithinPartitions(*[F.col(c) for c in range_cols])
-    elif partition_by:
-        # One shuffle so output tasks hold whole partition values:
-        # without this, every input task writes a file into every
-        # partition dir (tasks × values small files — measured 4× wall
-        # on the gold fact write). ``files_per_partition`` salts the
-        # shuffle so heavy partition values still write in parallel —
-        # raise it when rows-per-value is large relative to executors
-        # (at 10M rows / 90 dates, 8 salts restored full parallelism).
-        salt = (F.rand(seed=0) * files_per_partition).cast("int")
-        df = df.repartition(*[F.col(c) for c in partition_by], salt)
     writer = df.write.format(lake_format()).mode(mode)
     if compression:
         writer = writer.option("compression", compression)
@@ -928,9 +927,7 @@ def scd2_upsert(
         # first rewrite orphans — scd2 is parquet-only end-to-end; the
         # Delta-mode dimension path is foreach_batch_scd2's documented
         # MERGE-chain alternative.
-        out = incoming
-        if partition_by:
-            out = out.repartition(*[F.col(c) for c in partition_by])
+        out = _shape_for_write(incoming, partition_by)
         _parquet_overwrite(out, partition_by).save(target_path)
         spark.catalog.refreshByPath(target_path)
         return

@@ -99,17 +99,17 @@ def test_delta_write_sets_options(delta_env, spark):
     """write_lake_table in Delta mode: format delta, mergeSchema +
     optimizeWrite options, partitionBy pass-through, save, refresh.
     (The real ``spark`` fixture is only here so Column expressions in
-    the salting step can build — the df is still a double.)"""
+    the shaping step can build — the df is still a double.)"""
     df = MagicMock()
-    # partitioned writes salt-repartition first, so the writer hangs
-    # off the REPARTITIONED frame
-    rep = df.repartition.return_value
+    # partitioned writes are rebalanced first, so the writer hangs off
+    # the REBALANCED frame
+    rep = df.hint.return_value
     writer = rep.write.format.return_value
     # every builder step returns the same writer double
     for m in ("mode", "option", "partitionBy"):
         getattr(writer, m).return_value = writer
     writers.write_lake_table(df, "/lake/t", partition_by=["d"])
-    df.repartition.assert_called_once()
+    df.hint.assert_called_once_with("rebalance", "d")
     rep.write.format.assert_called_once_with("delta")
     writer.mode.assert_called_once_with("overwrite")
     assert writer.option.call_args_list == [

@@ -932,6 +932,20 @@ def test_winnow_arrow_matches_expr_twin(spark, sf_dir):
         assert got == want
 
 
+def test_winnow_list_offsets_overflow_fails_loudly():
+    """The winnowing kernel's int32 list offsets: a batch whose
+    selections total more than 2^31 - 1 values must raise, not wrap to
+    negative offsets. Sizes only — no large allocation."""
+    import pyarrow as pa
+
+    from fintech_lakehouse_spark.functions.text import _list_offsets
+
+    assert _list_offsets([2, 0, 3]).to_pylist() == [0, 2, 2, 5]
+    assert _list_offsets([2**31 - 2, 1]).to_pylist()[-1] == 2**31 - 1
+    with pytest.raises(pa.ArrowInvalid):
+        _list_offsets([2**30, 2**30])
+
+
 def test_winnowing_shift_invariance(spark):
     """Selected fingerprint VALUES of a shared run do not depend on
     where the run sits in the document (position-robustness — the

@@ -93,6 +93,41 @@ def test_monitoring_recorded(lake):
     assert not summary["failed_stages"]
 
 
+def test_silver_monitor_counts_match_lake(spark, tmp_path):
+    """The silver_<table> monitor row takes its counts from the DQ
+    pass; they must equal what actually landed in the silver and
+    quarantine tables. Known-bad bronze rows: an unknown currency
+    (a WARNING check — still quarantined) and a negative amount."""
+    config = EngineConfig(env="dev", base_path=str(tmp_path))
+    pipe = MedallionPipeline(spark, config)
+    raw = generate_transactions(spark, 200, n_customers=20, n_merchants=5)
+    bad_currency = [f"TXN{i:09d}" for i in (3, 50, 51)]
+    bad_amount = [f"TXN{i:09d}" for i in (7, 120)]
+    tid = F.col("transaction_id")
+    raw = raw.withColumn(
+        "currency",
+        F.when(tid.isin(bad_currency), "XXX").otherwise(F.col("currency")),
+    ).withColumn(
+        "amount", F.when(tid.isin(bad_amount), "-5.00").otherwise(F.col("amount"))
+    )
+    pipe.promote_silver("transactions", pipe.ingest_bronze("transactions", raw))
+    row = next(
+        r for r in pipe.monitor.finish()["rows"]
+        if r["stage_name"] == "silver_transactions"
+    )
+    silver = spark.read.parquet(config.layer_path("silver", "transactions"))
+    quarantine = spark.read.parquet(
+        config.layer_path("quarantine", "transactions")
+    )
+    assert {r["transaction_id"] for r in quarantine.collect()} >= {
+        *bad_currency, *bad_amount
+    }
+    assert row["rows_read"] == 200
+    assert row["rows_written"] == silver.count()
+    assert row["rows_quarantined"] == quarantine.count()
+    assert row["rows_written"] + row["rows_quarantined"] == 200
+
+
 def test_fx_rates_shape(spark):
     fx = generate_exchange_rates(spark, days=10)
     assert fx.count() == 80  # 10 days × 8 currencies

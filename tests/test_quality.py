@@ -157,6 +157,8 @@ def test_all_checks_single_action(spark, txns, monkeypatch):
     assert by_name["uniqueness_transaction_id"].failed_records == 1
     assert by_name["uniqueness_transaction_id_customer_id"].failed_records == 0
     assert by_name["uniqueness_currency"].failed_records == 2  # 5 rows, 3 ccys
+    # the quarantine count rides in the same action: TXN3 + TXN4
+    assert (report.total_records, report.quarantined_records) == (5, 2)
 
 
 def test_valid_invalid_split(txns):
@@ -169,6 +171,8 @@ def test_valid_invalid_split(txns):
     valid, invalid = checker.get_valid_invalid_dfs()
     assert valid.count() == 3
     assert invalid.count() == 2
+    report = checker.run()
+    assert (report.total_records, report.quarantined_records) == (5, 2)
     assert "_validation_failures" not in valid.columns
     reasons = {
         r["transaction_id"]: set(r["_validation_failures"])

@@ -276,6 +276,58 @@ def test_replace_lake_rows_preserves_partition_layout(spark, tmp_path):
     assert got == {("01", "a", 10), ("02", "b", 2)}
 
 
+def test_partitioned_write_splits_only_the_heavy_value(spark, tmp_path):
+    """Partitioned writes are shaped by data size (REBALANCE): with a
+    small advisory partition size, the one heavy partition value is
+    written by several tasks (several files) while every light value
+    stays one file — and the rows round-trip. The light values are
+    picked outside the heavy value's hash bucket, since splitting a
+    bucket splits every value hashed into it."""
+    import os
+
+    # the shuffle's own partition id for a value: pmod(hash(p), n)
+    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    buckets = dict(
+        spark.createDataFrame(
+            [("hot",)] + [(f"v{i:02d}",) for i in range(40)], "p string"
+        )
+        .select("p", F.pmod(F.hash("p"), F.lit(n_buckets)))
+        .collect()
+    )
+    light = sorted(v for v, b in buckets.items() if b != buckets["hot"])[:5]
+    assert len(light) == 5
+    # 8 map partitions; 20 rows per light value, the rest is "hot"; an
+    # md5 payload keeps the shuffle bytes from compressing away
+    slot = (F.col("id") % 400).cast("int")
+    df = spark.range(0, 8_000, numPartitions=8).select(
+        "id",
+        F.when(slot < 5, F.array(*map(F.lit, light))[slot])
+        .otherwise(F.lit("hot"))
+        .alias("p"),
+        F.md5(F.col("id").cast("string")).alias("payload"),
+    )
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        path = str(tmp_path / "t")
+        write_lake_table(df, path, partition_by=["p"])
+    finally:
+        spark.conf.set(key, old)
+    files = {
+        d[len("p="):]: sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(path, d))
+        )
+        for d in os.listdir(path)
+        if d.startswith("p=")
+    }
+    assert set(files) == {"hot", *light}
+    assert all(files[v] == 1 for v in light), files
+    assert files["hot"] > 1, files
+    out = spark.read.parquet(path).select("id", "p", "payload")
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+
+
 def test_upsert_staged_read_keeps_string_partition_type(spark, tmp_path):
     """Selective upsert stages through a partitioned dir; the re-read
     must cast partition values back to the target schema instead of
