@@ -78,7 +78,7 @@ def salted_shuffle_join(
     joins would emit unmatched other-side rows once PER SALT — not
     supported, use the unsalted join or swap sides.
 
-    MEASURED (scripts/skew_join_bench.py, BASELINE.md §2 r6): 5M rows
+    MEASURED (BASELINE.md §"Skew-join A/B", round 6): 5M rows
     with an 80% hot key against a 200k-row non-broadcastable side —
     1.49 s salted vs 2.57 s plain, and AQE's skew-join never engaged
     because the ~100 MB hot partition sits under its 256 MB
@@ -122,7 +122,7 @@ def hot_key_guard(
     re-aggregate per row (no retraction), so one hot key costs
     O(rows × frame_rows) in a single task — measured unfinishable at
     2M rows with an 80%-hot user while the bucketed form stays ~1 s
-    (scripts/skew_velocity_bench.py, BASELINE.md §2). No salting can
+    (BASELINE.md §"Skew experiment", round 6). No salting can
     fix it without changing semantics, so the honest contract is to
     REFUSE fast and point at the bounded formulation.
 

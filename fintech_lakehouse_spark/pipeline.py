@@ -8,10 +8,12 @@ absent from the repo).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from fintech_lakehouse_spark.config import (
     MAX_TRANSACTION_AMOUNT,
     MIN_TRANSACTION_AMOUNT,
+    TABLES,
     VALID_CURRENCIES,
     VALID_TRANSACTION_STATUSES,
     EngineConfig,
@@ -21,11 +23,10 @@ from fintech_lakehouse_spark.operators.gold import (
     build_agg_customer_360,
     build_agg_daily_metrics,
     build_agg_merchant_performance,
-    build_dim_customer,
     build_dim_date,
-    build_dim_merchant,
     build_fact_transactions,
 )
+from fintech_lakehouse_spark.operators.keys import extend_dense_surrogate_key
 from fintech_lakehouse_spark.operators.medallion import bronze_to_silver
 from fintech_lakehouse_spark.operators.metadata import (
     add_ingestion_metadata,
@@ -84,8 +85,6 @@ class MedallionPipeline:
         """The reference's canonical transaction rule set
         (ref: src/config/base.py:19-50 business rules), plus the
         spec-derived NOT-NULL contract columns."""
-        from pyspark.sql import functions as F
-
         from fintech_lakehouse_spark.quality import DQCheckType
 
         return (
@@ -159,41 +158,14 @@ class MedallionPipeline:
         customers: DataFrame,
         merchants: DataFrame,
     ) -> dict[str, DataFrame]:
-        """Silver → gold star schema + aggregates (SURVEY §2.4 A6-A8)."""
-        self.monitor.start_stage("gold")
-        # persist the shared frames: fact feeds four writes and each
-        # dim feeds two — unpersisted, the dense-surrogate-key range
-        # shuffles would re-execute per consumer
-        dim_customer = build_dim_customer(customers).persist()
-        dim_merchant = build_dim_merchant(merchants).persist()
-        dim_date = build_dim_date(transactions)
-        fact = build_fact_transactions(
-            transactions, dim_customer, dim_merchant
-        ).persist()
-        gold = {
-            "dim_date": dim_date,
-            "dim_customer": dim_customer,
-            "dim_merchant": dim_merchant,
-            "fact_transactions": fact,
-            "agg_daily_metrics": build_agg_daily_metrics(fact),
-            "agg_customer_360": build_agg_customer_360(fact, dim_customer),
-            "agg_merchant_performance": build_agg_merchant_performance(
-                fact, dim_merchant
-            ),
-        }
-        for name, df in gold.items():
-            partition = ["transaction_date"] if name == "fact_transactions" else None
-            write_lake_table(
-                df,
-                self.config.layer_path("gold", name),
-                partition_by=partition,
-            )
-        for df in (fact, dim_customer, dim_merchant):
-            df.unpersist()
-        self.monitor.end_stage("gold")
+        """Silver → gold star schema + aggregates (SURVEY §2.4 A6-A8):
+        the refresh of an empty lake, so the first build and every
+        day-N refresh write the seven gold tables through one path.
+        Returns the stored gold tables."""
+        self._refresh_gold("gold", transactions, customers, merchants)
         return {
             name: read_lake_table(self.spark, self.config.layer_path("gold", name))
-            for name in gold
+            for name in TABLES["gold"]
         }
 
     def update_dimension_scd2(
@@ -227,27 +199,28 @@ class MedallionPipeline:
     def _refresh_dim_stable(
         self,
         name: str,
-        build_fn,
         snapshot: DataFrame,
         sk_col: str,
         natural_keys: list[str],
     ) -> DataFrame:
-        """Read the stored gold dim (None on first run), extend it with
-        stable surrogate keys from the snapshot, write it back, return
-        the refreshed dim."""
-        from fintech_lakehouse_spark.operators.keys import (
-            extend_dense_surrogate_key,
-        )
+        """Extend the stored gold dim (if any) with stable surrogate
+        keys from the snapshot, write it back, return the stored dim.
 
+        STABLE keys: rebuilding positional 1..N keys on a grown
+        snapshot renumbers every key after an insertion point, so fact
+        rows written in earlier runs would silently misjoin (review
+        finding r6s5). Writing the dim back makes the numbering durable
+        for the next refresh."""
         path = self.config.layer_path("gold", name)
         existing = read_existing_table(self.spark, path)
-        if existing is None:
-            refreshed = build_fn(snapshot).persist()
-        else:
-            refreshed = extend_dense_surrogate_key(
-                existing, snapshot, sk_col, natural_keys
-            ).persist()
-        refreshed.count()  # materialize BEFORE overwriting its source
+        refreshed = extend_dense_surrogate_key(
+            existing, snapshot, sk_col, natural_keys
+        )
+        if existing is not None:
+            # the refreshed dim reads the dim it overwrites:
+            # materialize it BEFORE the overwrite deletes its source
+            refreshed = refreshed.persist()
+            refreshed.count()
         write_lake_table(refreshed, path)
         refreshed.unpersist()
         return read_lake_table(self.spark, path)
@@ -258,66 +231,74 @@ class MedallionPipeline:
         customers: DataFrame,
         merchants: DataFrame,
     ) -> None:
-        """Steady-state gold refresh (SURVEY §3.2 at day N): a new
-        silver batch MERGEs into fact_transactions with the
-        partition-pruned selective overwrite (only the dates present in
-        the batch — or holding a restated key — are rewritten), and
-        agg_daily_metrics is recomputed ONLY for the affected dates via
-        a partition-pruned fact read. Cost is proportional to the
-        batch's date span, not table size — the property that makes a
-        daily refresh of a 100 TB fact affordable."""
-        from pyspark.sql import functions as F
+        """Steady-state gold refresh (SURVEY §3.2 at day N): the same
+        path as :meth:`build_gold`, over the stored lake."""
+        self._refresh_gold("gold_incremental", transactions, customers, merchants)
 
-        self.monitor.start_stage("gold_incremental")
-        # STABLE dims: rebuilding positional 1..N keys on a grown
-        # snapshot renumbers every key after an insertion point, so
-        # fact rows written in earlier runs would silently misjoin
-        # (review finding r6s5). extend_dense_surrogate_key keeps the
-        # stored dim's keys, appends max+rank for new natural keys,
-        # and the refreshed dims are WRITTEN BACK so the numbering is
-        # durable for the next refresh.
+    def _refresh_gold(
+        self,
+        stage: str,
+        transactions: DataFrame,
+        customers: DataFrame,
+        merchants: DataFrame,
+    ) -> None:
+        """The one gold write path: refresh the stable-key dims, MERGE
+        the batch into fact_transactions, then rebuild every table
+        derived from the fact. On an empty lake each step is a plain
+        write.
+
+        Cost model, per refresh:
+        * the fact MERGE rewrites only the touched dates — the batch's
+          dates plus the current dates of restated keys — and
+          agg_daily_metrics is recomputed only for those dates from a
+          partition-pruned fact read. Both scale with the touched
+          dates, not the table.
+        * dim_date, agg_customer_360 and agg_merchant_performance are
+          rebuilt from the whole merged fact and written whole, so they
+          scale with the fact, the same as the first build. A
+          customer's or merchant's rows span every date partition, so
+          a key-scoped recompute would scan the same fact; and a
+          profile change (SCD1) can move a key the batch never names.
+        The dims scale with the snapshot."""
+        self.monitor.start_stage(stage)
         dim_customer = self._refresh_dim_stable(
-            "dim_customer", build_dim_customer, customers,
-            "customer_sk", ["customer_id"],
+            "dim_customer", customers, "customer_sk", ["customer_id"]
         )
         dim_merchant = self._refresh_dim_stable(
-            "dim_merchant", build_dim_merchant, merchants,
-            "merchant_sk", ["merchant_id"],
+            "dim_merchant", merchants, "merchant_sk", ["merchant_id"]
         )
-        # persist: the delta feeds the dates collect, the old-dates
-        # semi-join, the MERGE and the final count — four actions
+        # persist: the batch feeds the scope collect and the MERGE
         fact_delta = build_fact_transactions(
             transactions, dim_customer, dim_merchant
         ).persist()
         fact_path = self.config.layer_path("gold", "fact_transactions")
-        # Affected dates = dates in the batch ∪ the CURRENT dates of
-        # matched keys (collected BEFORE the upsert — a restated
-        # transaction whose date changed removes its old fact row, so
-        # the old date's aggregate must be recomputed too, possibly to
-        # zero rows). Both collects are date-cardinality bounded.
-        dates = {
-            r["transaction_date"]
-            for r in fact_delta.select("transaction_date").distinct().collect()
-        }
         # ONLY a missing fact table is "first run": a transient read
         # error swallowed here would skip the old-date recompute and
         # leave a restated transaction's stale agg_daily_metrics row
-        # in place — the staleness bug this collect exists to fix.
-        fact = read_existing_table(self.spark, fact_path)
-        old_dates = set() if fact is None else {
-            r["transaction_date"]
-            for r in fact.join(
-                fact_delta.select("transaction_id").distinct(),
-                "transaction_id",
-                "left_semi",
+        # in place.
+        stored = read_existing_table(self.spark, fact_path)
+        # Refresh scope, one date-cardinality collect BEFORE the MERGE:
+        # the batch's rows per date, plus the CURRENT dates of restated
+        # keys (count 0) — a restated transaction whose date changed
+        # removes its old fact row, so the old date's aggregate must be
+        # recomputed too, possibly to zero rows.
+        scope = fact_delta.groupBy("transaction_date").count()
+        if stored is not None:
+            restated = stored.join(
+                fact_delta.select("transaction_id"), "transaction_id", "left_semi"
             )
-            .select("transaction_date")
-            .distinct()
-            .collect()
-        }
+            scope = scope.unionByName(
+                restated.select("transaction_date").distinct()
+                .withColumn("count", F.lit(0).cast("long"))
+            )
+        per_date = scope.collect()
+        rows = sum(r["count"] for r in per_date)
         # None-safe sort: a NULL transaction_date (quarantine gap) must
         # not TypeError the whole refresh mid-flight
-        dates = sorted(dates | old_dates, key=lambda d: (d is None, d))
+        dates = sorted(
+            {r["transaction_date"] for r in per_date},
+            key=lambda d: (d is None, d),
+        )
         upsert_lake_table(
             self.spark,
             fact_delta,
@@ -325,20 +306,26 @@ class MedallionPipeline:
             merge_keys=["transaction_id"],
             partition_by=["transaction_date"],
         )
-        fact_touched = read_lake_table(self.spark, fact_path).filter(
-            F.col("transaction_date").isin(dates)  # partition-pruned scan
-        )
+        fact = read_lake_table(self.spark, fact_path)
+        for name, df in (
+            ("dim_date", build_dim_date(fact)),
+            ("agg_customer_360", build_agg_customer_360(fact, dim_customer)),
+            (
+                "agg_merchant_performance",
+                build_agg_merchant_performance(fact, dim_merchant),
+            ),
+        ):
+            write_lake_table(df, self.config.layer_path("gold", name))
         # replace (not MERGE): a refreshed date with zero remaining
         # fact rows must DELETE its stale aggregate row.
         replace_lake_rows(
             self.spark,
-            build_agg_daily_metrics(fact_touched),
+            build_agg_daily_metrics(
+                fact.filter(F.col("transaction_date").isin(dates))
+            ),
             self.config.layer_path("gold", "agg_daily_metrics"),
             key_col="transaction_date",
             values=dates,
         )
-        n = fact_delta.count()
         fact_delta.unpersist()
-        self.monitor.end_stage(
-            "gold_incremental", rows_read=n, rows_written=n
-        )
+        self.monitor.end_stage(stage, rows_read=rows, rows_written=rows)

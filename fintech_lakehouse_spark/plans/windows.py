@@ -202,7 +202,7 @@ def user_hourly_velocity_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     stay registered — per-event for small/interactive scopes, this
     one for the full-corpus sweep.
 
-    MEASURED (scripts/skew_velocity_bench.py, BASELINE.md §2 r6): with
+    MEASURED (BASELINE.md §"Skew experiment", round 6): with
     one user owning 80% of 200k events, the exact per-event window
     takes 17.6 s vs 0.77 s for this form (23×), and the gap is
     super-linear — at 2M rows the exact window never finished (15+

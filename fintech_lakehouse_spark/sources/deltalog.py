@@ -79,10 +79,8 @@ LOG_DIR = "_delta_log"
 # Above this many total deleted rows (sum of descriptor cardinalities)
 # the DV anti-join switches from driver-decoded broadcast to
 # DISTRIBUTED decode + shuffle join (VERDICT r9 item 1) — the driver
-# never materializes the index set. Env-overridable for tests/probes.
-DV_BROADCAST_MAX_ROWS = int(
-    os.environ.get("FLS_DV_BROADCAST_MAX_ROWS", "1000000")
-)
+# never materializes the index set.
+DV_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def _nullable_datatype(dt):
@@ -5044,9 +5042,7 @@ def _dv_encode_matches(
     matched-ROW count (the prior driver-side ``toPandas()`` of every
     matched pair was the one remaining driver-bound in DV DML). Per-task
     memory is one file's index set — the same bound delta-spark's own
-    per-file DV writer has. Set ``FLS_DV_DRIVER_ENCODE=1`` to force the
-    legacy driver-side encode (kept as the bit-identity twin for the
-    probe in ``scripts/dv_encode_probe.py``)."""
+    per-file DV writer has."""
     import pandas as _pd
 
     from fintech_lakehouse_spark.sources.deletionvectors import (
@@ -5054,34 +5050,6 @@ def _dv_encode_matches(
         encode_roaring_bitmap_array,
     )
 
-    if os.environ.get("FLS_DV_DRIVER_ENCODE") == "1":
-        pdf = matches.toPandas()
-        matched_by_rel: dict[str, set] = {}
-        for bn, ri in zip(pdf["_dl_file"], pdf["_dl_ri"]):
-            rel = by_bn.get(bn)
-            if rel is None:
-                raise ValueError(
-                    f"{op_name}: scanned basename {bn!r} is missing from "
-                    "the snapshot lookup (unanticipated URI encoding?) — "
-                    "refusing"
-                )
-            matched_by_rel.setdefault(rel, set()).add(int(ri))
-        out = []
-        for rel in sorted(matched_by_rel):
-            old = (
-                set(decode_deletion_vector(path, snap.deletion_vectors[rel]))
-                if rel in snap.deletion_vectors
-                else set()
-            )
-            newly = matched_by_rel[rel] - old
-            if not newly:
-                continue
-            rows = sorted(old | newly)
-            out.append(
-                (rel, encode_roaring_bitmap_array(rows), len(rows),
-                 len(newly))
-            )
-        return out
     # basename → (rel, existing-DV descriptor JSON), broadcast so a
     # million-file snapshot ships once per executor, not per task
     meta = {

@@ -250,6 +250,81 @@ def test_incremental_restated_date_refreshes_old_aggregate(lake, spark):
     assert row["n_transactions"] == len(moved_ids)
 
 
+def test_refresh_keeps_every_derived_gold_table_current(lake, spark, tmp_path):
+    """After a day-N refresh every gold table derived from the fact
+    must equal its builder re-run over the stored fact and dims. The
+    batch holds a new customer, a restated amount and a transaction
+    moved past the fact's last date; the customer snapshot changes the
+    profile of a customer who is not in the batch."""
+    import datetime as dt
+
+    from fintech_lakehouse_spark.operators.gold import (
+        build_agg_customer_360,
+        build_agg_daily_metrics,
+        build_agg_merchant_performance,
+        build_dim_date,
+    )
+
+    config = EngineConfig(env="dev", base_path=str(tmp_path))
+    pipe = MedallionPipeline(spark, config)
+    silver = lake["silver"]
+    txns, custs = silver["transactions"], silver["customers"]
+    pipe.build_gold(txns, custs, silver["merchants"])
+
+    tid, cid = F.col("transaction_id"), F.col("customer_id")
+    first, second = txns.orderBy("transaction_id").limit(2).collect()
+    next_day = txns.agg(F.max("transaction_date")).first()[0] + dt.timedelta(1)
+    restated = txns.filter(tid == first["transaction_id"]).withColumn(
+        "amount_usd", (F.col("amount_usd") * 2).cast("decimal(18,2)")
+    )
+    moved = (
+        txns.filter(tid == second["transaction_id"])
+        .withColumn("transaction_date", F.lit(next_day))
+        .withColumn("transaction_timestamp", F.lit(next_day).cast("timestamp"))
+    )
+    by_new_customer = restated.withColumn(
+        "transaction_id", F.concat(tid, F.lit("_NEW"))
+    ).withColumn("customer_id", F.lit("CUSTNEW"))
+    batch = restated.unionByName(moved).unionByName(by_new_customer)
+    in_batch = [first["customer_id"], second["customer_id"]]
+    bystander = (
+        txns.filter(~cid.isin(in_batch)).agg(F.min("customer_id")).first()[0]
+    )
+    snapshot = custs.withColumn(
+        "segment",
+        F.when(cid == bystander, F.lit("REPROFILED")).otherwise(F.col("segment")),
+    ).unionByName(
+        custs.filter(cid == first["customer_id"]).withColumn(
+            "customer_id", F.lit("CUSTNEW")
+        )
+    )
+
+    pipe.incremental_fact_update(batch, snapshot, silver["merchants"])
+
+    def stored(name):
+        return spark.read.parquet(config.layer_path("gold", name))
+
+    fact = stored("fact_transactions")
+    rebuilt = {
+        "dim_date": build_dim_date(fact),
+        "agg_daily_metrics": build_agg_daily_metrics(fact),
+        "agg_customer_360": build_agg_customer_360(fact, stored("dim_customer")),
+        "agg_merchant_performance": build_agg_merchant_performance(
+            fact, stored("dim_merchant")
+        ),
+    }
+    for name, want in rebuilt.items():
+        got = stored(name)
+        want = want.select(*got.columns)
+        assert got.exceptAll(want).count() == 0, f"{name}: stale rows"
+        assert want.exceptAll(got).count() == 0, f"{name}: missing rows"
+    # the scenario reached every table it should have
+    assert stored("dim_date").agg(F.max("date")).first()[0] == next_day
+    c360 = stored("agg_customer_360")
+    assert c360.filter(cid == "CUSTNEW").count() == 1
+    assert c360.filter(cid == bystander).first()["segment"] == "REPROFILED"
+
+
 def test_scd2_dimension_in_pipeline(lake, spark):
     """Pipeline-level SCD2: customer risk restatements accumulate
     history in the gold layer and point-in-time lookups resolve."""
@@ -300,21 +375,29 @@ def test_incremental_refresh_keeps_surrogate_keys_stable(spark, tmp_path):
         return spark.createDataFrame(
             [
                 (f"T{i}", f"C{c}", "M1", 10.0, 10.0, 0.0, 10.0,
-                 datetime.date(2024, 1, 1), False, "COMPLETED")
+                 datetime.date(2024, 1, 1), datetime.datetime(2024, 1, 1, 9),
+                 False, "COMPLETED")
                 for i, c in enumerate(ids)
             ],
             "transaction_id string, customer_id string, merchant_id string, "
             "amount double, amount_usd double, fee_amount double, "
-            "net_amount double, transaction_date date, is_flagged boolean, "
+            "net_amount double, transaction_date date, "
+            "transaction_timestamp timestamp, is_flagged boolean, "
             "status string",
         )
 
     def custs(ids):
         return spark.createDataFrame(
-            [(f"C{c}", f"Name{c}") for c in ids], "customer_id string, name string"
+            [(f"C{c}", f"Name{c}", "RETAIL", "VERIFIED", "10", "US") for c in ids],
+            "customer_id string, full_name string, segment string, "
+            "kyc_status string, risk_score string, country string",
         )
 
-    merch = spark.createDataFrame([("M1", "Shop")], "merchant_id string, name string")
+    merch = spark.createDataFrame(
+        [("M1", "Shop", "GROCERY", "LOW", "0.02")],
+        "merchant_id string, merchant_name string, mcc_category string, "
+        "risk_tier string, fee_rate string",
+    )
 
     # day 1: customers C1, C3
     pipe.incremental_fact_update(txns([1, 3]), custs([1, 3]), merch)
