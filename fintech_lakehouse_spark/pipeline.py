@@ -34,6 +34,7 @@ from fintech_lakehouse_spark.operators.metadata import (
 )
 from fintech_lakehouse_spark.quality import DataQualityChecker
 from fintech_lakehouse_spark.sources.writers import (
+    hadoop_fs,
     read_existing_table,
     read_lake_table,
     replace_lake_rows,
@@ -158,10 +159,17 @@ class MedallionPipeline:
         customers: DataFrame,
         merchants: DataFrame,
     ) -> dict[str, DataFrame]:
-        """Silver → gold star schema + aggregates (SURVEY §2.4 A6-A8):
-        the refresh of an empty lake, so the first build and every
-        day-N refresh write the seven gold tables through one path.
-        Returns the stored gold tables."""
+        """Silver → gold star schema + aggregates (SURVEY §2.4 A6-A8),
+        rebuilt from scratch: drop the seven gold tables, then run the
+        refresh over the now empty lake, so the first build and every
+        day-N refresh write gold through one path. Without the drop a
+        rebuild over a smaller batch would MERGE into the old gold and
+        keep rows its inputs no longer hold. The inputs must not read
+        the gold layer. Returns the stored gold tables."""
+        fs, jvm = hadoop_fs(self.spark, self.config.base_path)
+        for name in TABLES["gold"]:
+            path = self.config.layer_path("gold", name)
+            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
         self._refresh_gold("gold", transactions, customers, merchants)
         return {
             name: read_lake_table(self.spark, self.config.layer_path("gold", name))

@@ -325,6 +325,36 @@ def test_refresh_keeps_every_derived_gold_table_current(lake, spark, tmp_path):
     assert c360.filter(cid == bystander).first()["segment"] == "REPROFILED"
 
 
+def test_build_gold_rebuilds_over_an_existing_gold_layer(lake, spark, tmp_path):
+    """A second build_gold on the same base path, over a smaller batch
+    (fewer customers, their transactions only, the last date gone),
+    must leave exactly the gold layer a build on a fresh path writes:
+    no fact rows, dim keys or daily aggregates from the first build."""
+    silver = lake["silver"]
+    txns, custs, merch = (
+        silver["transactions"], silver["customers"], silver["merchants"]
+    )
+    small_custs = custs.orderBy("customer_id").limit(N_CUST // 2)
+    last_day = txns.agg(F.max("transaction_date")).first()[0]
+    small_txns = txns.join(
+        small_custs.select("customer_id"), "customer_id", "left_semi"
+    ).filter(F.col("transaction_date") < last_day)
+
+    def pipe_at(name):
+        config = EngineConfig(env="dev", base_path=str(tmp_path / name))
+        return MedallionPipeline(spark, config)
+
+    reused = pipe_at("reused")
+    reused.build_gold(txns, custs, merch)
+    got = reused.build_gold(small_txns, small_custs, merch)
+    want = pipe_at("fresh").build_gold(small_txns, small_custs, merch)
+    assert got["fact_transactions"].count() == small_txns.count()
+    for name in want:
+        w = want[name].select(*got[name].columns)
+        assert got[name].exceptAll(w).count() == 0, f"{name}: stale rows"
+        assert w.exceptAll(got[name]).count() == 0, f"{name}: missing rows"
+
+
 def test_scd2_dimension_in_pipeline(lake, spark):
     """Pipeline-level SCD2: customer risk restatements accumulate
     history in the gold layer and point-in-time lookups resolve."""
