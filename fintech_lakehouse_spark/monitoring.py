@@ -73,26 +73,17 @@ class StageMetrics:
 
 
 def create_metrics_table(spark: SparkSession, table_name: str) -> None:
-    """Metrics table DDL (ref: src/utils/monitoring.py:284-312);
-    parquet here, Delta when the package is present."""
+    """Metrics table DDL (ref: src/utils/monitoring.py:284-312), its
+    columns taken from METRICS_SCHEMA; parquet here, Delta when the
+    package is present."""
     from fintech_lakehouse_spark.sources.writers import lake_format
 
+    columns = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in METRICS_SCHEMA.fields
+    )
     spark.sql(
-        f"""
-        CREATE TABLE IF NOT EXISTS {table_name} (
-            run_id STRING,
-            pipeline_name STRING,
-            stage_name STRING,
-            status STRING,
-            started_at TIMESTAMP,
-            ended_at TIMESTAMP,
-            duration_seconds DOUBLE,
-            rows_read BIGINT,
-            rows_written BIGINT,
-            rows_quarantined BIGINT,
-            error_message STRING
-        ) USING {lake_format().upper()}
-        """
+        f"CREATE TABLE IF NOT EXISTS {table_name} ({columns})"
+        f" USING {lake_format().upper()}"
     )
 
 

@@ -1,6 +1,8 @@
 """Gold-layer builders (SURVEY §2.3 J3, §2.4 A6-A8): the star schema
 the reference DECLARES (src/config/base.py:83-97) but never implements
-— dims, fact, and the three aggregate tables, built Spark-first.
+— dim_date, fact, and the three aggregate tables, built Spark-first.
+The customer and merchant dims take stable dense surrogate keys from
+``operators.keys.extend_dense_surrogate_key``.
 
 Scale notes baked in:
 * dims are small → dense surrogate keys are fine; fact keeps natural
@@ -13,8 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from fintech_lakehouse_spark.operators.keys import add_dense_surrogate_key
 
 
 def build_dim_date(transactions: DataFrame) -> DataFrame:
@@ -38,17 +38,6 @@ def build_dim_date(transactions: DataFrame) -> DataFrame:
             F.dayofweek("date").isin(1, 7).alias("is_weekend"),
         )
     )
-
-
-def build_dim_customer(customers: DataFrame) -> DataFrame:
-    """gold.dim_customer (ref src/config/base.py:88): silver customers
-    + dense surrogate key."""
-    return add_dense_surrogate_key(customers, "customer_sk", ["customer_id"])
-
-
-def build_dim_merchant(merchants: DataFrame) -> DataFrame:
-    """gold.dim_merchant (ref src/config/base.py:89)."""
-    return add_dense_surrogate_key(merchants, "merchant_sk", ["merchant_id"])
 
 
 def build_fact_transactions(

@@ -37,7 +37,7 @@ from fintech_lakehouse_spark.sources.writers import (
     hadoop_fs,
     read_existing_table,
     read_lake_table,
-    replace_lake_rows,
+    replace_lake_rows,  # noqa: F401  perfbench's tracer patches this name
     upsert_lake_table,
     write_lake_table,
 )
@@ -252,21 +252,21 @@ class MedallionPipeline:
     ) -> None:
         """The one gold write path: refresh the stable-key dims, MERGE
         the batch into fact_transactions, then rebuild every table
-        derived from the fact. On an empty lake each step is a plain
-        write.
+        derived from the fact by one rule. On an empty lake each step
+        is a plain write.
 
         Cost model, per refresh:
         * the fact MERGE rewrites only the touched dates — the batch's
-          dates plus the current dates of restated keys — and
-          agg_daily_metrics is recomputed only for those dates from a
-          partition-pruned fact read. Both scale with the touched
-          dates, not the table.
-        * dim_date, agg_customer_360 and agg_merchant_performance are
-          rebuilt from the whole merged fact and written whole, so they
-          scale with the fact, the same as the first build. A
-          customer's or merchant's rows span every date partition, so
-          a key-scoped recompute would scan the same fact; and a
-          profile change (SCD1) can move a key the batch never names.
+          dates plus the current dates of restated keys, which
+          ``upsert_lake_table`` works out — so it scales with the
+          touched dates, not the table.
+        * dim_date and the three aggregates are rebuilt from the whole
+          merged fact and written whole, so they scale with the fact,
+          the same as the first build. A customer's or merchant's rows
+          span every date partition, a profile change (SCD1) can move
+          a key the batch never names, and a day-N batch's restatements
+          touch most recent dates, so a key- or date-scoped recompute
+          would scan about as much of the fact.
         The dims scale with the snapshot."""
         self.monitor.start_stage(stage)
         dim_customer = self._refresh_dim_stable(
@@ -275,38 +275,12 @@ class MedallionPipeline:
         dim_merchant = self._refresh_dim_stable(
             "dim_merchant", merchants, "merchant_sk", ["merchant_id"]
         )
-        # persist: the batch feeds the scope collect and the MERGE
+        # persist: the batch feeds the monitor count and the MERGE
         fact_delta = build_fact_transactions(
             transactions, dim_customer, dim_merchant
         ).persist()
+        rows = fact_delta.count()
         fact_path = self.config.layer_path("gold", "fact_transactions")
-        # ONLY a missing fact table is "first run": a transient read
-        # error swallowed here would skip the old-date recompute and
-        # leave a restated transaction's stale agg_daily_metrics row
-        # in place.
-        stored = read_existing_table(self.spark, fact_path)
-        # Refresh scope, one date-cardinality collect BEFORE the MERGE:
-        # the batch's rows per date, plus the CURRENT dates of restated
-        # keys (count 0) — a restated transaction whose date changed
-        # removes its old fact row, so the old date's aggregate must be
-        # recomputed too, possibly to zero rows.
-        scope = fact_delta.groupBy("transaction_date").count()
-        if stored is not None:
-            restated = stored.join(
-                fact_delta.select("transaction_id"), "transaction_id", "left_semi"
-            )
-            scope = scope.unionByName(
-                restated.select("transaction_date").distinct()
-                .withColumn("count", F.lit(0).cast("long"))
-            )
-        per_date = scope.collect()
-        rows = sum(r["count"] for r in per_date)
-        # None-safe sort: a NULL transaction_date (quarantine gap) must
-        # not TypeError the whole refresh mid-flight
-        dates = sorted(
-            {r["transaction_date"] for r in per_date},
-            key=lambda d: (d is None, d),
-        )
         upsert_lake_table(
             self.spark,
             fact_delta,
@@ -317,6 +291,7 @@ class MedallionPipeline:
         fact = read_lake_table(self.spark, fact_path)
         for name, df in (
             ("dim_date", build_dim_date(fact)),
+            ("agg_daily_metrics", build_agg_daily_metrics(fact)),
             ("agg_customer_360", build_agg_customer_360(fact, dim_customer)),
             (
                 "agg_merchant_performance",
@@ -324,16 +299,5 @@ class MedallionPipeline:
             ),
         ):
             write_lake_table(df, self.config.layer_path("gold", name))
-        # replace (not MERGE): a refreshed date with zero remaining
-        # fact rows must DELETE its stale aggregate row.
-        replace_lake_rows(
-            self.spark,
-            build_agg_daily_metrics(
-                fact.filter(F.col("transaction_date").isin(dates))
-            ),
-            self.config.layer_path("gold", "agg_daily_metrics"),
-            key_col="transaction_date",
-            values=dates,
-        )
         fact_delta.unpersist()
         self.monitor.end_stage(stage, rows_read=rows, rows_written=rows)

@@ -170,21 +170,20 @@ def _key_in_values(key_col: str, values: list):
 def _read_typed(
     spark: SparkSession,
     path: str,
+    read: DataFrame,
     like: DataFrame,
-    partition_cols: list[str] | None,
+    partition_cols: list[str],
 ) -> DataFrame:
-    """Parquet read with the PARTITION columns' types taken from
-    ``like``'s schema instead of directory-name inference. Partition
-    values live only in dir names, so a plain read re-infers their
-    type from the strings — '01' drifts to int 1 and a later
-    partitioned rewrite would re-dir it as p=1 (ADVICE r4 low #5).
-    Supplying an explicit schema disables that inference; the raw
-    directory string is cast to the declared type instead, so '01'
-    stays '01' for a string column. Non-partition columns keep the
-    parquet file types (overriding those could conflict with the
-    physical encoding)."""
-    if not partition_cols:
-        return spark.read.parquet(path)
+    """Re-read ``path`` with the schema of ``read`` (a frame the caller
+    already read from it, so no second schema inference) but the
+    PARTITION columns' types taken from ``like``. Partition values live
+    only in dir names, so a plain read infers their type from the
+    strings — '01' drifts to int 1 and a later partitioned rewrite
+    would re-dir it as p=1 (ADVICE r4 low #5). An explicit schema
+    disables that inference; the raw directory string is cast to the
+    declared type instead, so '01' stays '01' for a string column.
+    Non-partition columns keep the parquet file types (overriding
+    those could conflict with the physical encoding)."""
     from pyspark.sql.types import StructField, StructType
 
     like_types = {f.name: f.dataType for f in like.schema.fields}
@@ -196,20 +195,9 @@ def _read_typed(
             else f.dataType,
             f.nullable,
         )
-        for f in spark.read.parquet(path).schema.fields
+        for f in read.schema.fields
     ]
     return spark.read.schema(StructType(fields)).parquet(path)
-
-
-def _cast_to_schema(df: DataFrame, schema) -> DataFrame:
-    """Reselect ``df`` to exactly ``schema``'s columns and types. Used
-    after staging round-trips: a partitioned staging write stores the
-    partition column in directory names, and the re-read INFERS its
-    type from those strings — a string partition value like '01' would
-    drift to int 1 for a generic caller (ADVICE r4 low #5)."""
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
 
 
 # Sibling working dir of a staged rewrite (``<table>__staging``); a
@@ -263,7 +251,8 @@ def _staged_overwrite(
     parquet can't overwrite a path the frame still reads from, so the
     frame is written to the sibling staging dir first (shaped by
     :func:`_shape_for_write`), read back with ``frame``'s
-    exact types and copied over the target. ``dynamic`` replaces ONLY
+    exact schema (partition columns included, so '01' stays '01') and
+    copied over the target. ``dynamic`` replaces ONLY
     the partition dirs present in the copy (untouched partitions keep
     their files) and returns the partition values it wrote, collected
     from the staged copy.
@@ -274,8 +263,8 @@ def _staged_overwrite(
     staging = path.rstrip("/") + _STAGING_SUFFIX
     out = _shape_for_write(frame, partition_by)
     _parquet_overwrite(out, partition_by).save(staging)
-    staged = _cast_to_schema(
-        _read_typed(spark, staging, frame, partition_by), frame.schema
+    staged = spark.read.schema(frame.schema).parquet(staging).select(
+        *frame.columns
     )
     w = _parquet_overwrite(staged, partition_by)
     if dynamic:
@@ -555,7 +544,9 @@ def upsert_lake_table(
         # partition-column types can't come from the target — dir-name
         # inference already drifted them ('01' → 1); the source batch
         # is the only type witness for partition columns
-        existing = _read_typed(spark, target_path, source_df, partition_by)
+        existing = _read_typed(
+            spark, target_path, existing, source_df, partition_by
+        )
     target_types = {f.name: f.dataType for f in existing.schema.fields}
     source_df = source_df.select(
         *[
@@ -630,7 +621,7 @@ def upsert_lake_table(
         # value type, escaped or not; the collect is file-count bounded
         # over only the emptied partitions.
         stale_files = (
-            _read_typed(spark, target_path, merged, partition_by)
+            spark.read.schema(merged.schema).parquet(target_path)
             .filter(_partitions_predicate(emptied, partition_by))
             .select(F.input_file_name().alias("f"))
             .distinct()
@@ -701,7 +692,7 @@ def replace_lake_rows(
     if partition_by:
         # re-read with the caller's partition-column types — the plain
         # read above already drifted them via dir-name inference
-        existing = _read_typed(spark, path, df, partition_by)
+        existing = _read_typed(spark, path, existing, df, partition_by)
     kept = existing.filter(~_key_in_values(key_col, values))
     merged = kept.unionByName(df, allowMissingColumns=True)
     _staged_overwrite(spark, merged, path, partition_by)
@@ -932,7 +923,9 @@ def scd2_upsert(
         spark.catalog.refreshByPath(target_path)
         return
     if partition_by:
-        existing = _read_typed(spark, target_path, incoming, partition_by)
+        existing = _read_typed(
+            spark, target_path, existing, incoming, partition_by
+        )
 
     history = existing.filter(~F.col("is_current"))
     current = existing.filter(F.col("is_current"))

@@ -65,7 +65,7 @@ def test_cached_dim_is_coalesced_and_keys_stay_dense(spark):
     every consumer schedules that many tasks. Pinned at the production
     default of 200, so a Spark upgrade or a conf edit that brings the
     exemption back fails here; the dense key must not move either."""
-    from fintech_lakehouse_spark.operators.gold import build_dim_customer
+    from fintech_lakehouse_spark.operators.keys import extend_dense_surrogate_key
 
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
@@ -74,7 +74,9 @@ def test_cached_dim_is_coalesced_and_keys_stay_dense(spark):
         customers = spark.range(1000).selectExpr(
             "format_string('C%05d', (id * 7919) % 1000) AS customer_id", "id AS x"
         )
-        dim = build_dim_customer(customers).persist()
+        dim = extend_dense_surrogate_key(
+            None, customers, "customer_sk", ["customer_id"]
+        ).persist()
         assert dim.count() == 1000
         assert dim.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
         rows = sorted(dim.select("customer_id", "customer_sk").collect())

@@ -176,6 +176,12 @@ def test_incremental_fact_update_touches_only_batch_dates(lake, spark):
     pipe.incremental_fact_update(
         delta, lake["silver"]["customers"], lake["silver"]["merchants"]
     )
+    # the stage's counts are the batch's rows: one restated, one new
+    stage = [
+        r for r in pipe.monitor.finish()["rows"]
+        if r["stage_name"] == "gold_incremental"
+    ][-1]
+    assert stage["rows_read"] == stage["rows_written"] == 2
 
     fact = spark.read.parquet(fact_path)
     assert fact.count() == before_count + 1  # one insert, one update

@@ -230,6 +230,7 @@ def test_monitor_metrics_table_name_goes_through_catalog(spark):
     import os
 
     from fintech_lakehouse_spark.monitoring import (
+        METRICS_SCHEMA,
         PipelineMonitor,
         create_metrics_table,
     )
@@ -237,6 +238,10 @@ def test_monitor_metrics_table_name_goes_through_catalog(spark):
     spark.sql("CREATE DATABASE IF NOT EXISTS mmon")
     create_metrics_table(spark, "mmon.metrics")
     try:
+        # the DDL is derived from METRICS_SCHEMA: same names and types
+        assert [
+            (f.name, f.dataType) for f in spark.table("mmon.metrics").schema
+        ] == [(f.name, f.dataType) for f in METRICS_SCHEMA]
         m = PipelineMonitor(spark, "p", metrics_table="mmon.metrics")
         m.start_stage("s")
         m.end_stage("s", rows_read=5)

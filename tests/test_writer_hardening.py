@@ -155,10 +155,10 @@ def test_scd2_transient_read_error_propagates(spark, tmp_path, monkeypatch):
 def test_incremental_fact_update_read_error_propagates(
     spark, tmp_path, monkeypatch
 ):
-    """The old-dates collect in incremental_fact_update must not treat
-    a transient read failure as "first run" — that would skip the
-    old-date recompute and leave a restated transaction's stale
-    agg row in place while reporting success."""
+    """The stored-fact read in incremental_fact_update (the MERGE's
+    ``read_existing_table`` in upsert_lake_table) must not treat a
+    transient read failure as "first run" — that would overwrite the
+    fact with the batch alone while reporting success."""
     from pyspark.sql.readwriter import DataFrameReader
 
     from fintech_lakehouse_spark.config import EngineConfig
