@@ -111,8 +111,8 @@ def add_surrogate_key(
     df: DataFrame, key_column_name: str, natural_key_columns: list[str]
 ) -> DataFrame:
     """ref: src/utils/spark_utils.py:486-511 — dense 1..N ordered by
-    the natural key, but via the parallel per-partition-offset plan
-    instead of the reference's single-task global window (SURVEY §4.2)."""
+    the natural key, in the reference's own form: ``row_number()`` over
+    a global window (see operators.keys.add_dense_surrogate_key)."""
     return add_dense_surrogate_key(df, key_column_name, natural_key_columns)
 
 

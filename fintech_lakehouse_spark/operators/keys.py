@@ -1,19 +1,18 @@
 """Surrogate keys (ref: add_surrogate_key,
 src/utils/spark_utils.py:486-511 / SURVEY §2.5 W2 and §4.2).
 
-The reference uses ``row_number().over(Window.orderBy(...))`` — an
-UNPARTITIONED window that collapses the whole table into one task
-(Spark even logs a warning). Two scale-correct alternatives:
-
-* ``add_surrogate_key`` — non-dense but parallel and stable-ish:
+* ``add_surrogate_key`` — non-dense but parallel:
   ``monotonically_increasing_id`` (partition-id ⊕ in-partition
   counter). Right choice for facts where only uniqueness matters.
-* ``add_dense_surrogate_key`` — dense 1..N like the reference, built
-  from per-partition counts + a cumulative offset (the classic
-  zipWithIndex shape, expressed with DataFrame ops): one narrow pass
-  to count per sort-partition, tiny driver-side offset table,
-  broadcast back. Cost: one range-partitioning sort shuffle — pay it
-  only for dims that truly need dense keys.
+* ``add_dense_surrogate_key`` — dense 1..N in natural-key order, the
+  reference's own form: one ``row_number()`` over a global order.
+  Numbering within ``spark_partition_id()`` and adding offsets counted
+  in a second branch of the plan is not safe: AQE, or a re-sampled
+  range shuffle, can partition the two branches differently, and keys
+  are then dropped, misnumbered or duplicated. One global window
+  cannot depend on partitioning.
+* ``extend_dense_surrogate_key`` — stable keys across refreshes; only
+  NEW natural keys are numbered, by the same rule.
 """
 
 from __future__ import annotations
@@ -33,38 +32,19 @@ def add_dense_surrogate_key(
     key_column_name: str = "sk",
     natural_key_columns: list[str] | None = None,
 ) -> DataFrame:
-    """Dense 1..N surrogate key ordered by the natural key.
+    """Dense 1..N surrogate key ordered by the natural key:
+    ``row_number()`` over a global window.
 
-    Sort by the natural key (range shuffle), number rows within each
-    partition, then add each partition's global offset (computed from
-    per-partition counts — a few hundred rows on the driver, bounded
-    by partition count, not data size)."""
+    Trade-off: the numbering runs in one task. Measured on 4 cores
+    (write to parquet, AQE on, warm): 0.16-0.18 s and 2 jobs at 1k
+    rows, 0.36 s at 100k, 4.92 s at 1M. At 1M a parallel numbering
+    wins (``distributed_sequence_id``: 3.46 s, the measured candidate
+    should a million-row dim appear); the gold dims are far smaller,
+    and a day-N refresh numbers only its new keys."""
     order_cols = natural_key_columns or df.columns
-    parted = df.repartitionByRange(*[F.col(c) for c in order_cols]).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    in_part = Window.partitionBy("_pid").orderBy(*[F.col(c) for c in order_cols])
-    numbered = parted.withColumn("_rn", F.row_number().over(in_part))
-    counts = (
-        numbered.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("_cnt"))
-        .withColumn(
-            "_offset",
-            F.coalesce(
-                F.sum("_cnt").over(
-                    Window.orderBy("_pid").rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_pid", "_offset")
-    )
-    return (
-        numbered.join(F.broadcast(counts), "_pid")
-        .withColumn(key_column_name, (F.col("_offset") + F.col("_rn")).cast("long"))
-        .drop("_pid", "_rn", "_offset")
+    return df.withColumn(
+        key_column_name,
+        F.row_number().over(Window.orderBy(*order_cols)).cast("long"),
     )
 
 

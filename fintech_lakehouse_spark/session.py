@@ -25,8 +25,8 @@ _SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Let AQE coalesce the final shuffle of a persisted plan too (Spark
     # exempts cached plans by default). Without it every consumer of
-    # a small cached frame — the dense-key gold dims, the stage caches
-    # — schedules spark.sql.shuffle.partitions map tasks. At the default
+    # a small cached frame — the stage caches, a persisted aggregate —
+    # schedules spark.sql.shuffle.partitions map tasks. At the default
     # 200 on 4 cores, the perfbench medallion cycle ran 1,679 gold and
     # 1,908 write tasks (now 87 and 115); median wall 41.8 → 31.8 s.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",

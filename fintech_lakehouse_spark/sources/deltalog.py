@@ -73,6 +73,7 @@ from urllib.parse import quote, unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
+from pyspark.sql.window import Window
 
 LOG_DIR = "_delta_log"
 
@@ -1760,49 +1761,18 @@ def identity_columns(schema: StructType) -> dict:
 
 
 def _assign_identity_values(df, name: str, dtype, first: int, step: int):
-    """Attach IDENTITY values first, first+step, … to ``df`` without a
-    global window (the add_dense_surrogate_key shape): number rows
-    within each partition, broadcast the per-partition offsets back.
-    Returns (frame with the column, row count) — the count feeds the
-    new high-water mark. One pid-hash shuffle; the offset table is
-    bounded by partition count, never data size."""
-    from pyspark.sql.window import Window as _W
-
-    parted = df.withColumn("_dl_id_pid", F.spark_partition_id())
-    w = _W.partitionBy("_dl_id_pid").orderBy(F.monotonically_increasing_id())
-    numbered = parted.withColumn("_dl_id_rn", F.row_number().over(w))
-    counts = (
-        numbered.groupBy("_dl_id_pid")
-        .agg(F.count(F.lit(1)).alias("_dl_id_cnt"))
-        .withColumn(
-            "_dl_id_off",
-            F.coalesce(
-                F.sum("_dl_id_cnt").over(
-                    _W.orderBy("_dl_id_pid").rowsBetween(
-                        _W.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
+    """Attach IDENTITY values first, first+step, … to ``df``: one
+    ``row_number()`` over a global window (the add_dense_surrogate_key
+    rule), so the values cannot depend on how the input is partitioned.
+    Per-partition offsets counted in one job and joined back in another
+    skip and reuse ids whenever the two jobs partition the input
+    differently. Returns (frame with the column, row count); the count
+    feeds the new high-water mark."""
+    rn = F.row_number().over(Window.orderBy(F.monotonically_increasing_id()))
+    out = df.withColumn(
+        name, (F.lit(first) + F.lit(step) * (rn - 1)).cast(dtype)
     )
-    n_rows = sum(r["_dl_id_cnt"] for r in counts.collect())
-    out = (
-        numbered.join(
-            F.broadcast(counts.select("_dl_id_pid", "_dl_id_off")),
-            "_dl_id_pid",
-        )
-        .withColumn(
-            name,
-            (
-                F.lit(first)
-                + F.lit(step)
-                * (F.col("_dl_id_off") + F.col("_dl_id_rn") - 1)
-            ).cast(dtype),
-        )
-        .drop("_dl_id_pid", "_dl_id_rn", "_dl_id_off")
-    )
-    return out, n_rows
+    return out, df.count()
 
 
 def _apply_identity_columns(df, schema: StructType, op: str):
@@ -1990,8 +1960,7 @@ def write_delta_commit(
     IDENTITY columns at creation (legacy gate minWriterVersion 6;
     field metadata ``delta.identity.*``). Writes missing the column
     get system-assigned values continuing past the stored high-water
-    mark — assigned with per-partition offsets, no global window —
-    and the SAME commit's metaData carries the advanced
+    mark — numbered by one global ``row_number()`` — and the SAME commit's metaData carries the advanced
     ``delta.identity.highWaterMark``; explicit values are refused
     unless the column declares ``allowExplicitInsert`` (then the
     high-water mark absorbs their extreme)."""

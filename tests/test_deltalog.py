@@ -3586,6 +3586,39 @@ class TestIdentityColumns:
             == 18
         )
 
+    def test_ids_unique_across_partitions_and_appends(self, spark, tmp_path):
+        """A range-partitioned input gets one id per row, the committed
+        high-water mark is the largest written id, and the appends after
+        it reuse none of them."""
+        from fintech_lakehouse_spark.sources.deltalog import (
+            delta_snapshot,
+            identity_columns,
+            read_delta_table,
+            write_delta_commit,
+        )
+
+        def frame(n, tag):
+            return spark.range(n).selectExpr(
+                f"format_string('{tag}%05d', (id * 7919) % {n}) AS v", "id AS x"
+            ).repartitionByRange(5, "v")
+
+        root = str(tmp_path / "idc_parts")
+        for i, tag in enumerate("abc"):
+            write_delta_commit(
+                spark, frame(3000, tag), root,
+                identity_spec=None if i else {"id": dict(start=10, step=2)},
+            )
+            got = read_delta_table(spark, root).agg(
+                F.count("*").alias("n"),
+                F.countDistinct("id").alias("d"),
+                F.max("id").alias("hi"),
+            ).collect()[0]
+            assert got["n"] == got["d"] == 3000 * (i + 1)
+            hwm = identity_columns(delta_snapshot(spark, root).schema)["id"][
+                "high_water_mark"
+            ]
+            assert hwm == got["hi"]
+
     def test_explicit_values_gated(self, spark, tmp_path):
         import pytest as _pytest
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from fintech_lakehouse_spark.operators import (
     add_dense_surrogate_key,
@@ -58,33 +59,103 @@ def test_dense_surrogate_key_dense_and_ordered(spark):
     assert [r["k"] for r in out] == ["a", "b", "c", "d"]  # natural-key order
 
 
-def test_cached_dim_is_coalesced_and_keys_stay_dense(spark):
+def test_cached_plan_output_partitioning_is_coalesced(spark):
     """session.py lets AQE coalesce the last shuffle of a persisted
-    plan (canChangeCachedPlanOutputPartitioning). Without it a cached
-    ~1k-row dim keeps spark.sql.shuffle.partitions partitions and
+    plan (canChangeCachedPlanOutputPartitioning). Without it a small
+    cached aggregate keeps spark.sql.shuffle.partitions partitions and
     every consumer schedules that many tasks. Pinned at the production
     default of 200, so a Spark upgrade or a conf edit that brings the
-    exemption back fails here; the dense key must not move either."""
-    from fintech_lakehouse_spark.operators.keys import extend_dense_surrogate_key
-
+    exemption back fails here."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "200")
-    dim = None
+    agg = None
     try:
-        customers = spark.range(1000).selectExpr(
-            "format_string('C%05d', (id * 7919) % 1000) AS customer_id", "id AS x"
+        agg = (
+            spark.range(1000)
+            .groupBy((F.col("id") % 100).alias("k"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .persist()
         )
-        dim = extend_dense_surrogate_key(
-            None, customers, "customer_sk", ["customer_id"]
-        ).persist()
-        assert dim.count() == 1000
-        assert dim.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
-        rows = sorted(dim.select("customer_id", "customer_sk").collect())
-        assert [r["customer_sk"] for r in rows] == list(range(1, 1001))
+        assert agg.count() == 100
+        assert agg.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
     finally:
-        if dim is not None:
-            dim.unpersist()
+        if agg is not None:
+            agg.unpersist()
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@pytest.fixture(params=[(aqe, n) for aqe in ("true", "false") for n in (4, 7, 200)],
+                ids=lambda p: f"aqe_{p[0]}-sp{p[1]}")
+def numbering_confs(spark, request):
+    """AQE on/off × shuffle partitions: the confs under which a
+    partition-dependent numbering drops or misnumbers rows."""
+    aqe, n = request.param
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in keys]
+    spark.conf.set(keys[0], aqe)
+    spark.conf.set(keys[1], str(n))
+    yield
+    for k, v in zip(keys, prev):
+        spark.conf.set(k, v)
+
+
+def _customers(spark, n=3000):
+    return spark.range(n).selectExpr(
+        f"format_string('C%05d', (id * 7919) % {n}) AS customer_id", "id AS x"
+    )
+
+
+def _written(df, path):
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)
+
+
+def test_dense_key_is_row_number_over_natural_key(spark, tmp_path, numbering_confs):
+    """Every input row keeps exactly one key, and the key is its
+    row_number() in natural-key order, whatever the partitioning."""
+    customers = _customers(spark).repartition(3)
+    dim = _written(
+        add_dense_surrogate_key(customers, "customer_sk", ["customer_id"]),
+        str(tmp_path / "dim"),
+    )
+    assert dim.count() == 3000
+    expected = dim.withColumn(
+        "rn", F.row_number().over(Window.orderBy("customer_id"))
+    )
+    assert expected.filter(F.col("customer_sk") != F.col("rn")).count() == 0
+
+
+def test_extended_dense_keys_number_only_new_keys(spark, tmp_path, numbering_confs):
+    """extend_dense_surrogate_key's new-key path: stored keys keep their
+    values; new keys, including ones that sort before and after every
+    stored key, get max(stored) + row_number() in natural-key order."""
+    from fintech_lakehouse_spark.operators.keys import extend_dense_surrogate_key
+
+    customers = _customers(spark)
+    stored = customers.filter(F.substring("customer_id", 2, 5).cast("int") % 3 == 0)
+    existing = stored.withColumn(
+        "customer_sk", F.row_number().over(Window.orderBy("customer_id")).cast("long")
+    )
+    edges = spark.createDataFrame(
+        [("A00000", -1), ("Z99999", -2)], "customer_id string, x long"
+    )
+    snapshot = customers.unionByName(edges).repartition(3)
+    dim = _written(
+        extend_dense_surrogate_key(existing, snapshot, "customer_sk", ["customer_id"]),
+        str(tmp_path / "dim"),
+    )
+    assert dim.count() == 3002
+    kept = dim.join(
+        existing.withColumnRenamed("customer_sk", "old_sk").drop("x"), "customer_id"
+    )
+    assert kept.count() == 1000
+    assert kept.filter(F.col("customer_sk") != F.col("old_sk")).count() == 0
+    new = dim.join(existing.select("customer_id"), "customer_id", "left_anti")
+    expected = new.withColumn(
+        "rn", F.row_number().over(Window.orderBy("customer_id")) + 1000
+    )
+    assert expected.count() == 2002
+    assert expected.filter(F.col("customer_sk") != F.col("rn")).count() == 0
 
 
 def test_standardize_strings(spark):
