@@ -34,9 +34,9 @@ from fintech_lakehouse_spark.operators.metadata import (
 )
 from fintech_lakehouse_spark.quality import DataQualityChecker
 from fintech_lakehouse_spark.sources.writers import (
+    _STAGING_SUFFIX,
     hadoop_fs,
     read_existing_table,
-    read_lake_table,
     replace_lake_rows,  # noqa: F401  perfbench's tracer patches this name
     upsert_lake_table,
     write_lake_table,
@@ -134,7 +134,7 @@ class MedallionPipeline:
             raise RuntimeError(f"DQ CRITICAL failure on {table}: {report.summary()}")
         valid, invalid = checker.get_valid_invalid_dfs()
         partition = ["transaction_date"] if table == "transactions" else None
-        write_lake_table(
+        silver = write_lake_table(
             valid,
             self.config.layer_path("silver", table),
             partition_by=partition,
@@ -151,7 +151,7 @@ class MedallionPipeline:
             rows_written=report.total_records - n_invalid,
             rows_quarantined=n_invalid,
         )
-        return read_lake_table(self.spark, self.config.layer_path("silver", table))
+        return silver
 
     def build_gold(
         self,
@@ -164,17 +164,16 @@ class MedallionPipeline:
         refresh over the now empty lake, so the first build and every
         day-N refresh write gold through one path. Without the drop a
         rebuild over a smaller batch would MERGE into the old gold and
-        keep rows its inputs no longer hold. The inputs must not read
-        the gold layer. Returns the stored gold tables."""
+        keep rows its inputs no longer hold. A table's staging copy
+        goes too, or the refresh would swap it in as a cut-off rewrite.
+        The inputs must not read the gold layer. Returns the stored
+        gold tables."""
         fs, jvm = hadoop_fs(self.spark, self.config.base_path)
         for name in TABLES["gold"]:
             path = self.config.layer_path("gold", name)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
-        self._refresh_gold("gold", transactions, customers, merchants)
-        return {
-            name: read_lake_table(self.spark, self.config.layer_path("gold", name))
-            for name in TABLES["gold"]
-        }
+            for p in (path, path + _STAGING_SUFFIX):
+                fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
+        return self._refresh_gold("gold", transactions, customers, merchants)
 
     def update_dimension_scd2(
         self,
@@ -195,11 +194,10 @@ class MedallionPipeline:
 
         self.monitor.start_stage(f"scd2_{name}")
         path = self.config.layer_path("gold", name)
-        scd2_upsert(
+        out = scd2_upsert(
             self.spark, updates, path, key=key,
             tracked_cols=tracked_cols, ts_col=ts_col,
         )
-        out = self.spark.read.parquet(path)
         n = updates.count()
         self.monitor.end_stage(f"scd2_{name}", rows_read=n, rows_written=n)
         return out
@@ -218,20 +216,13 @@ class MedallionPipeline:
         snapshot renumbers every key after an insertion point, so fact
         rows written in earlier runs would silently misjoin (review
         finding r6s5). Writing the dim back makes the numbering durable
-        for the next refresh."""
+        for the next refresh. The new dim reads the stored one it
+        replaces; ``write_lake_table`` keeps the stored dim whole until
+        the new one is, so a failed write leaves the old numbering."""
         path = self.config.layer_path("gold", name)
         existing = read_existing_table(self.spark, path)
-        refreshed = extend_dense_surrogate_key(
-            existing, snapshot, sk_col, natural_keys
-        )
-        if existing is not None:
-            # the refreshed dim reads the dim it overwrites:
-            # materialize it BEFORE the overwrite deletes its source
-            refreshed = refreshed.persist()
-            refreshed.count()
-        write_lake_table(refreshed, path)
-        refreshed.unpersist()
-        return read_lake_table(self.spark, path)
+        refreshed = extend_dense_surrogate_key(existing, snapshot, sk_col, natural_keys)
+        return write_lake_table(refreshed, path)
 
     def incremental_fact_update(
         self,
@@ -249,11 +240,11 @@ class MedallionPipeline:
         transactions: DataFrame,
         customers: DataFrame,
         merchants: DataFrame,
-    ) -> None:
+    ) -> dict[str, DataFrame]:
         """The one gold write path: refresh the stable-key dims, MERGE
         the batch into fact_transactions, then rebuild every table
         derived from the fact by one rule. On an empty lake each step
-        is a plain write.
+        is a plain write. Returns the stored gold tables.
 
         Cost model, per refresh:
         * the fact MERGE rewrites only the touched dates — the batch's
@@ -280,15 +271,14 @@ class MedallionPipeline:
             transactions, dim_customer, dim_merchant
         ).persist()
         rows = fact_delta.count()
-        fact_path = self.config.layer_path("gold", "fact_transactions")
-        upsert_lake_table(
+        gold = {"dim_customer": dim_customer, "dim_merchant": dim_merchant}
+        gold["fact_transactions"] = fact = upsert_lake_table(
             self.spark,
             fact_delta,
-            fact_path,
+            self.config.layer_path("gold", "fact_transactions"),
             merge_keys=["transaction_id"],
             partition_by=["transaction_date"],
         )
-        fact = read_lake_table(self.spark, fact_path)
         for name, df in (
             ("dim_date", build_dim_date(fact)),
             ("agg_daily_metrics", build_agg_daily_metrics(fact)),
@@ -298,6 +288,7 @@ class MedallionPipeline:
                 build_agg_merchant_performance(fact, dim_merchant),
             ),
         ):
-            write_lake_table(df, self.config.layer_path("gold", name))
+            gold[name] = write_lake_table(df, self.config.layer_path("gold", name))
         fact_delta.unpersist()
         self.monitor.end_stage(stage, rows_read=rows, rows_written=rows)
+        return gold

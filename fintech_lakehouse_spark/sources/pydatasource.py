@@ -206,8 +206,8 @@ class PagedJsonWriter(DataSourceWriter):
     the DRIVER's commit() renames the temp files onto the next
     contiguous page numbers. The rename step is what makes the write
     atomic-per-job: a failed or speculative task's temp file is never
-    named into the page sequence — the same staged-rename discipline
-    as sources/writers.py's ``__staging`` protocol. Cleanup is
+    named into the page sequence — the same write-aside-then-rename
+    rule as sources/writers.py's ``__staging`` swap. Cleanup is
     SELF-HEALING rather than abort-dependent: a task dying
     mid-iteration reaps its own temp (write()'s except path), and
     commit() reaps any stale temps from prior failed jobs, because on
@@ -325,7 +325,8 @@ def vacuum_paged_dir(path: str) -> int:
     """Remove crash-leftover ``.tmp`` files from a paged directory
     (the standalone twin of the reap PagedJsonWriter.commit performs;
     same single-writer assumption, same rationale as
-    sources/writers.py::vacuum_lake_table's ``__staging`` cleanup).
+    sources/writers.py::vacuum_lake_table's ``__staging`` / ``__old``
+    cleanup).
     Returns the number of files removed."""
     removed = 0
     if not os.path.isdir(path):

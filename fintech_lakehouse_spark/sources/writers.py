@@ -5,15 +5,19 @@ and 519-588 — S4-S6, T1-T2 in SURVEY §2.1/§2.11) but runs in two modes:
 
 * ``delta`` when delta-spark is importable: real Delta writes, MERGE
   upsert, OPTIMIZE/ZORDER/VACUUM.
-* ``parquet`` fallback (this container): plain partitioned parquet,
-  upsert implemented as a unionByName + window-dedup overwrite — same
-  logical result, full-rewrite cost (documented; Delta is the scale
-  path).
+* ``parquet`` fallback: plain partitioned parquet with one overwrite
+  rule — no step deletes the only committed copy of a table before its
+  replacement is complete. A full rewrite is written once beside the
+  table and swapped in by renames (:func:`_staged_overwrite`); a
+  partition-scoped MERGE is Spark's dynamic partition overwrite. The
+  renames are atomic on the local FS and HDFS, not on object stores:
+  there a table needs a log, and a ``_delta_log`` path is written
+  through it (sources/deltalog.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -98,29 +102,16 @@ def _is_missing_path(exc: Exception, path: str | None = None) -> bool:
     When ``path`` is supplied, an infer-schema failure over a
     directory that still holds data files is therefore NOT classified
     as first-run: the caller re-raises and a human decides."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # pragma: no cover - very old pyspark
-        return "Path does not exist" in str(exc)
+    from pyspark.errors import AnalysisException
+
     if not isinstance(exc, AnalysisException):
         return False
-    cls = None
-    get_cls = getattr(exc, "getErrorClass", None)
-    if callable(get_cls):
-        try:
-            cls = get_cls()
-        except Exception:
-            cls = None
-    msg = str(exc)
-    if cls == "PATH_NOT_FOUND" or "PATH_NOT_FOUND" in msg or (
-        "Path does not exist" in msg
-    ):
-        return True
+    cls = exc.getCondition()
     # Delta's missing-table class (raised instead of PATH_NOT_FOUND
     # when delta-spark handles the read): same first-run semantics.
-    if cls == "DELTA_PATH_DOES_NOT_EXIST" or "DELTA_PATH_DOES_NOT_EXIST" in msg:
+    if cls in ("PATH_NOT_FOUND", "DELTA_PATH_DOES_NOT_EXIST"):
         return True
-    if cls == "UNABLE_TO_INFER_SCHEMA" or "UNABLE_TO_INFER_SCHEMA" in msg:
+    if cls == "UNABLE_TO_INFER_SCHEMA":
         return not (path is not None and _dir_has_data_files(path))
     return False
 
@@ -188,22 +179,60 @@ def _read_typed(
 
     like_types = {f.name: f.dataType for f in like.schema.fields}
     fields = [
-        StructField(
-            f.name,
-            like_types.get(f.name, f.dataType)
-            if f.name in set(partition_cols)
-            else f.dataType,
-            f.nullable,
-        )
+        StructField(f.name, like_types.get(f.name, f.dataType), f.nullable)
+        if f.name in partition_cols
+        else f
         for f in read.schema.fields
     ]
     return spark.read.schema(StructType(fields)).parquet(path)
 
 
-# Sibling working dir of a staged rewrite (``<table>__staging``); a
-# crash between the staging write and its delete leaves it for
-# vacuum_lake_table to reap.
+# Sibling dirs of a parquet rewrite: the new copy is written to
+# ``<table>__staging``, the old one parked at ``<table>__old`` during the
+# swap. read_existing_table finishes a committed staging dir whose table
+# is gone; vacuum_lake_table reaps crash leftovers.
 _STAGING_SUFFIX = "__staging"
+_OLD_SUFFIX = "__old"
+
+
+def _rename(fs, jvm, src: str, dst: str) -> None:
+    """Hadoop FS rename, raising where it reports failure as False."""
+    hpath = jvm.org.apache.hadoop.fs.Path
+    if not fs.rename(hpath(src), hpath(dst)):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def _swap_in(spark: SparkSession, new: str, path: str, old: str) -> None:
+    """Replace directory ``path`` by the complete directory ``new``:
+    rename ``path`` aside to ``old``, ``new`` to ``path``, then delete
+    ``old``. ``path`` is moved aside rather than renamed over, because
+    Hadoop moves a directory renamed onto an existing one INSIDE it."""
+    fs, jvm = hadoop_fs(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs.delete(hpath(old), True)  # left by a crash after an earlier swap
+    if fs.exists(hpath(path)):
+        _rename(fs, jvm, path, old)
+    _rename(fs, jvm, new, path)
+    fs.delete(hpath(old), True)
+
+
+def _finish_swap(spark: SparkSession, path: str) -> None:
+    """Finish a swap cut off between its renames: ``path`` is gone and
+    ``<path>__staging`` holds a committed (``_SUCCESS``) copy, which is
+    the table — so a table caught mid-swap never reads as a first run."""
+    staging = path.rstrip("/") + _STAGING_SUFFIX
+    if not dir_committed(spark, staging):
+        return
+    fs, jvm = hadoop_fs(spark, path)
+    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
+        _rename(fs, jvm, staging, path)
+
+
+def _read_back(spark: SparkSession, frame: DataFrame, path: str) -> DataFrame:
+    """The parquet table at ``path`` read with the schema of ``frame``
+    just written there: no schema-inference job, and partition values
+    keep their type ('01' stays '01' for a string column)."""
+    return spark.read.schema(frame.schema).parquet(path).select(*frame.columns)
 
 
 def _parquet_overwrite(df: DataFrame, partition_by: list[str] | None):
@@ -245,41 +274,24 @@ def _staged_overwrite(
     frame: DataFrame,
     path: str,
     partition_by: list[str] | None,
-    dynamic: bool = False,
-) -> set[tuple] | None:
-    """Overwrite ``path`` with ``frame`` through ``<path>__staging``:
-    parquet can't overwrite a path the frame still reads from, so the
-    frame is written to the sibling staging dir first (shaped by
-    :func:`_shape_for_write`), read back with ``frame``'s
-    exact schema (partition columns included, so '01' stays '01') and
-    copied over the target. ``dynamic`` replaces ONLY
-    the partition dirs present in the copy (untouched partitions keep
-    their files) and returns the partition values it wrote, collected
-    from the staged copy.
-
-    The staging dir is deleted only after the copy succeeded — if the
-    copy fails, the staged rows survive for recovery (and for
-    vacuum_lake_table) instead of leaving no copy at all."""
-    staging = path.rstrip("/") + _STAGING_SUFFIX
-    out = _shape_for_write(frame, partition_by)
-    _parquet_overwrite(out, partition_by).save(staging)
-    staged = spark.read.schema(frame.schema).parquet(staging).select(
-        *frame.columns
-    )
-    w = _parquet_overwrite(staged, partition_by)
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.save(path)
-    written = (
-        {tuple(r) for r in staged.select(*partition_by).distinct().collect()}
-        if dynamic
-        else None
-    )
-    # otherwise every rewrite leaves a full copy of its rows on disk
-    fs, jvm = hadoop_fs(spark, staging)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    cluster_by: list[str] | None = None,
+    compression: str | None = None,
+) -> DataFrame:
+    """The one full rewrite of a parquet table: write ``frame`` once,
+    shaped by :func:`_shape_for_write`, to ``<path>__staging``, then
+    :func:`_swap_in` the staged copy. The stored table stays whole until
+    its replacement is, so ``frame`` may read ``path`` itself, and a
+    failed write leaves the previous table in place. Returns the
+    committed table (:func:`_read_back`)."""
+    _finish_swap(spark, path)
+    base = path.rstrip("/")
+    w = _parquet_overwrite(_shape_for_write(frame, partition_by, cluster_by), partition_by)
+    if compression:
+        w = w.option("compression", compression)
+    w.save(base + _STAGING_SUFFIX)
+    _swap_in(spark, base + _STAGING_SUFFIX, path, base + _OLD_SUFFIX)
     spark.catalog.refreshByPath(path)
-    return written
+    return _read_back(spark, frame, path)
 
 
 def _partitions_predicate(rows, partition_by: list[str]):
@@ -303,8 +315,10 @@ def write_lake_table(
     merge_schema: bool = True,
     cluster_by: list[str] | None = None,
     compression: str | None = None,
-) -> None:
-    """Partitioned lake write (ref: src/utils/spark_utils.py:203-245).
+) -> DataFrame:
+    """Partitioned lake write (ref: src/utils/spark_utils.py:203-245);
+    returns the committed table. A parquet overwrite is
+    :func:`_staged_overwrite`, so ``df`` may read ``path`` itself.
 
     ``partition_by`` should be the dominant filter column (e.g. the
     transaction/order date) so partition pruning kicks in on read.
@@ -317,7 +331,7 @@ def write_lake_table(
 
     ``compression``: parquet codec (e.g. "zstd" for cold data,
     "snappy" default for hot)."""
-    df = _shape_for_write(df, partition_by, cluster_by)
+    spark = df.sparkSession
     if lake_format() != "delta":
         from fintech_lakehouse_spark.sources.deltalog import (
             has_delta_log,
@@ -336,11 +350,16 @@ def write_lake_table(
                     "delta-spark — append/overwrite only"
                 )
             write_delta_commit(
-                df.sparkSession, df, path, mode=mode,
-                partition_by=partition_by,
+                spark, _shape_for_write(df, partition_by, cluster_by), path,
+                mode=mode, partition_by=partition_by,
             )
-            df.sparkSession.catalog.refreshByPath(path)
-            return
+            spark.catalog.refreshByPath(path)
+            return read_lake_table(spark, path)
+        if mode == "overwrite":
+            return _staged_overwrite(
+                spark, df, path, partition_by, cluster_by, compression
+            )
+    df = _shape_for_write(df, partition_by, cluster_by)
     writer = df.write.format(lake_format()).mode(mode)
     if compression:
         writer = writer.option("compression", compression)
@@ -355,6 +374,9 @@ def write_lake_table(
     # tables over this location) — without this, a catalog table read
     # after an overwrite resolves to deleted files.
     df.sparkSession.catalog.refreshByPath(path)
+    if lake_format() == "delta":
+        return read_lake_table(spark, path)
+    return _read_back(spark, df, path)
 
 
 def read_lake_table(spark: SparkSession, path: str) -> DataFrame:
@@ -385,7 +407,8 @@ def read_existing_table(
     ``_is_missing_path`` classifies as a missing table mean "first
     run"; everything else (transient FS error, permission, a damaged
     table) re-raises rather than being silently overwritten (ADVICE r4
-    medium #2, r5 low #2)."""
+    medium #2, r5 low #2). A swap cut off midway is finished first."""
+    _finish_swap(spark, path)
     try:
         return (read or read_lake_table)(spark, path)
     except Exception as exc:
@@ -425,8 +448,9 @@ def upsert_lake_table(
     merge_keys: list[str],
     order_by: str | None = None,
     partition_by: list[str] | None = None,
-) -> None:
-    """MERGE upsert (ref: src/utils/spark_utils.py:285-344, S6).
+) -> DataFrame:
+    """MERGE upsert (ref: src/utils/spark_utils.py:285-344, S6);
+    returns the committed table.
 
     Delta mode: ``whenMatchedUpdateAll / whenNotMatchedInsertAll`` on the
     conjunctive key equality — a co-partitioned join under the hood.
@@ -437,21 +461,21 @@ def upsert_lake_table(
 
     When ``partition_by`` names the target's partition columns, the
     rewrite is SELECTIVE: only partitions that hold source rows or
-    matched keys are merged and replaced (dynamic partition overwrite);
-    untouched partition directories are never read for the merge nor
-    rewritten. Affected partitions are found from (a) the source's
-    partition values and (b) a key-columns-only semi-join against the
-    target — a column-pruned scan of the keys, not the data — so a
-    key whose partition value CHANGES still gets its old row replaced.
-    This is the 100 TB shape: cost proportional to touched partitions,
-    not table size. Without ``partition_by`` the fallback is a
-    documented full rewrite (fine for dims).
+    matched keys are merged and replaced, by a dynamic partition
+    overwrite straight from the merged frame; untouched partition
+    directories are never read for the merge nor rewritten. Affected
+    partitions are found from (a) the source's partition values and
+    (b) a key-columns-only semi-join against the target — a
+    column-pruned scan of the keys, not the data — so a key whose
+    partition value CHANGES still gets its old row replaced. This is
+    the 100 TB shape: cost proportional to touched partitions, not
+    table size. Without ``partition_by`` the fallback is a documented
+    full rewrite (fine for dims).
     """
     existing = read_existing_table(spark, target_path)
     if existing is None:
-        write_lake_table(source_df, target_path, mode="overwrite",
-                         partition_by=partition_by)
-        return
+        return write_lake_table(source_df, target_path, mode="overwrite",
+                                partition_by=partition_by)
 
     if lake_format() != "delta":
         from fintech_lakehouse_spark.sources.deltalog import (
@@ -513,7 +537,7 @@ def upsert_lake_table(
                     spark, target_path, src, merge_keys
                 )
             spark.catalog.refreshByPath(target_path)
-            return
+            return read_lake_table(spark, target_path)
 
     if lake_format() == "delta":
         from delta.tables import DeltaTable
@@ -531,7 +555,7 @@ def upsert_lake_table(
             .whenNotMatchedInsertAll()
             .execute()
         )
-        return
+        return read_lake_table(spark, target_path)
 
     # MERGE semantics: the TARGET's schema wins. Without this cast, a
     # source batch with a drifted column type (e.g. a decimal widened
@@ -574,7 +598,7 @@ def upsert_lake_table(
             .collect()
         )
         if not affected:
-            return  # empty micro-batch: nothing to merge or rewrite
+            return existing  # empty micro-batch: nothing to merge or rewrite
         if len(affected) > MAX_SELECTIVE_PARTITIONS:
             selective = False
         else:
@@ -597,11 +621,19 @@ def upsert_lake_table(
     )
     if not selective:
         # Full rewrite — partition layout kept (see _parquet_overwrite).
-        _staged_overwrite(spark, merged, target_path, partition_by)
-        return
-    remaining = _staged_overwrite(
-        spark, merged, target_path, partition_by, dynamic=True
+        return _staged_overwrite(spark, merged, target_path, partition_by)
+    # A dynamic overwrite may read its own target (a static one refuses)
+    # and replaces only the partition dirs it writes; an Observation on
+    # the write stage itself reports which, with no second pass.
+    written = Observation()
+    out = _shape_for_write(merged, partition_by).observe(
+        written, F.collect_set(F.struct(*partition_by)).alias("parts")
     )
+    _parquet_overwrite(out, partition_by).option(
+        "partitionOverwriteMode", "dynamic"
+    ).save(target_path)
+    spark.catalog.refreshByPath(target_path)
+    remaining = {tuple(r) for r in written.get["parts"]}
     # An affected partition can end up EMPTY (every key moved to a new
     # partition value); dynamic overwrite never sees it, so the stale
     # dir must be dropped explicitly.
@@ -640,6 +672,7 @@ def upsert_lake_table(
             if fs.exists(p):
                 fs.delete(p, True)
         spark.catalog.refreshByPath(target_path)
+    return _read_back(spark, merged, target_path)
 
 
 def replace_lake_rows(
@@ -711,8 +744,9 @@ def optimize_lake_table(
     Parquet mode: selective small-file compaction — each top-level
     partition directory (or the table root when unpartitioned) holding
     more than ``max_files_per_partition`` parquet files is rewritten to
-    one file; directories already compact are NOT touched (their files
-    keep their timestamps). ``z_order_columns`` become a
+    one file beside the table and swapped in (:func:`_swap_in`);
+    directories already compact are NOT touched (their files keep
+    their timestamps). ``z_order_columns`` become a
     sort-within-partitions during the rewrite, tightening per-row-group
     min/max stats so scans skip row groups on those predicates — the
     parquet analog of Z-ordering (same rationale as write_lake_table's
@@ -731,11 +765,10 @@ def optimize_lake_table(
         return False
 
     def parquet_count(dir_path) -> int:
-        n = 0
-        for st in fs.listStatus(dir_path):
-            if st.isFile() and st.getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
+        return sum(
+            st.isFile() and st.getPath().getName().endswith(".parquet")
+            for st in fs.listStatus(dir_path)
+        )
 
     part_dirs = [
         st.getPath()
@@ -759,24 +792,14 @@ def optimize_lake_table(
             )
         elif z_order_columns:
             df = df.sortWithinPartitions(*z_order_columns)
-        # staging lives OUTSIDE the table root: an in-root
-        # `p=1__compact` dir would be discovered as an extra partition
-        # value by every reader between a crash and the vacuum —
-        # duplicate rows for up to the retention window. The sibling
-        # placement matches the upsert staging convention (and is
-        # already reaped by vacuum_lake_table's sibling scan).
-        staging = (
-            path.rstrip("/") + "__compact/" + d.getName()
-        )
+        # staged and swapped OUTSIDE the table root: an in-root
+        # `p=1__compact` dir would read as an extra partition value
+        # (duplicate rows) until a vacuum reaped it
+        staging = path.rstrip("/") + "__compact/" + d.getName()
         df.write.format("parquet").mode("overwrite").save(staging)
-        spark.read.parquet(staging).coalesce(1).write.format("parquet").mode(
-            "overwrite"
-        ).save(d.toString())
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+        _swap_in(spark, staging, d.toString(), staging + _OLD_SUFFIX)
         compacted = True
-    staging_root = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact")
-    if fs.exists(staging_root):
-        fs.delete(staging_root, True)
+    fs.delete(jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact"), True)
     if compacted:
         spark.catalog.refreshByPath(path)
     return compacted
@@ -787,36 +810,25 @@ def vacuum_lake_table(spark: SparkSession, path: str, retention_hours: int = 168
 
     Delta mode: real VACUUM. Parquet mode: every file under a plain
     parquet table IS referenced, so the only unreferenced data is
-    crash-leftover ``__staging`` / ``__compact`` working directories
-    (an upsert or compaction killed between its staging write and its
-    cleanup). Remove those siblings once they are older than the
-    retention window; returns True when anything was deleted."""
+    crash-leftover ``__staging`` / ``__old`` / ``__compact`` siblings
+    (a rewrite or compaction killed mid-swap). After :func:`_finish_swap`
+    they are removed once older than the retention window; returns True
+    when anything was deleted."""
     if lake_format() == "delta":
         spark.sql(f"VACUUM delta.`{path}` RETAIN {retention_hours} HOURS")
         return True
     import time as _time
 
+    _finish_swap(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     base = path.rstrip("/")
     cutoff_ms = int((_time.time() - retention_hours * 3600) * 1000)
     deleted = False
-    for suffix in (_STAGING_SUFFIX, "__compact"):
+    for suffix in (_STAGING_SUFFIX, _OLD_SUFFIX, "__compact"):
         p = jvm.org.apache.hadoop.fs.Path(base + suffix)
         if fs.exists(p) and fs.getFileStatus(p).getModificationTime() < cutoff_ms:
             fs.delete(p, True)
             deleted = True
-    # partition-level compaction leftovers live INSIDE the table dir
-    root = jvm.org.apache.hadoop.fs.Path(base)
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.endswith((_STAGING_SUFFIX, "__compact"))
-                and st.getModificationTime() < cutoff_ms
-            ):
-                fs.delete(st.getPath(), True)
-                deleted = True
     return deleted
 
 
@@ -853,8 +865,9 @@ def scd2_upsert(
     tracked_cols: list[str],
     ts_col: str = "effective_ts",
     partition_by: list[str] | None = None,
-) -> None:
-    """Slowly-Changing-Dimension Type 2 merge into a parquet dim table.
+) -> DataFrame:
+    """Slowly-Changing-Dimension Type 2 merge into a parquet dim table;
+    returns the stored table.
 
     On-disk contract: the business columns plus ``effective_from``
     (timestamp), ``effective_to`` (timestamp, null = open-ended) and
@@ -876,11 +889,11 @@ def scd2_upsert(
     Scale shape: one equi-join of the CURRENT slice against the batch
     keys (both sides shuffle on the key; history rows are not read
     beyond the is_current filter, which a partition-on-is_current
-    layout would prune), then a staged atomic swap like
-    ``upsert_lake_table``. This is the standard dimension-history
-    operator a fintech gold layer needs for customer/merchant
-    attributes (risk ratings, addresses) — MERGE alone cannot express
-    the close-and-insert pair."""
+    layout would prune), then one :func:`_staged_overwrite`, so a
+    failed rewrite leaves the previous history in place. This is the
+    standard dimension-history operator a fintech gold layer needs for
+    customer/merchant attributes (risk ratings, addresses) — MERGE
+    alone cannot express the close-and-insert pair."""
     from pyspark.sql.window import Window
 
     # A CDC event without an event time cannot be ordered into the
@@ -911,17 +924,10 @@ def scd2_upsert(
         spark, target_path, read=lambda s, p: s.read.parquet(p)
     )
     if existing is None:
-        # Bootstrap writes PARQUET explicitly: this operator reads and
-        # rewrites raw parquet on every subsequent run, so a
-        # write_lake_table bootstrap (format-aware → Delta when
-        # delta-spark is installed) would create a _delta_log that the
-        # first rewrite orphans — scd2 is parquet-only end-to-end; the
-        # Delta-mode dimension path is foreach_batch_scd2's documented
-        # MERGE-chain alternative.
-        out = _shape_for_write(incoming, partition_by)
-        _parquet_overwrite(out, partition_by).save(target_path)
-        spark.catalog.refreshByPath(target_path)
-        return
+        # PARQUET even where write_lake_table would write Delta: scd2 is
+        # parquet-only end-to-end (the Delta-mode dimension path is
+        # foreach_batch_scd2's MERGE chain).
+        return _staged_overwrite(spark, incoming, target_path, partition_by)
     if partition_by:
         existing = _read_typed(
             spark, target_path, existing, incoming, partition_by
@@ -984,7 +990,7 @@ def scd2_upsert(
         .unionByName(closed)
         .unionByName(new_rows.select(*existing.columns))
     )
-    _staged_overwrite(spark, result, target_path, partition_by)
+    return _staged_overwrite(spark, result, target_path, partition_by)
 
 
 def snapshot_diff(

@@ -331,6 +331,112 @@ def test_refresh_keeps_every_derived_gold_table_current(lake, spark, tmp_path):
     assert c360.filter(cid == bystander).first()["segment"] == "REPROFILED"
 
 
+GOLD = (
+    "dim_customer",
+    "dim_merchant",
+    "fact_transactions",
+    "dim_date",
+    "agg_daily_metrics",
+    "agg_customer_360",
+    "agg_merchant_performance",
+)
+
+
+@pytest.fixture(scope="module")
+def refresh_case(lake, spark, tmp_path_factory):
+    """A built gold lake, a day-N refresh over it and the gold tables a
+    clean run of that refresh stores. The snapshot adds a customer
+    whose id sorts first, with 50 new transactions, so keys numbered
+    afresh would differ from the stored ones for every customer."""
+    import shutil
+
+    silver = lake["silver"]
+    txns, custs = silver["transactions"], silver["customers"]
+    base = tmp_path_factory.mktemp("refresh_case")
+    built, clean = str(base / "built"), str(base / "clean")
+    MedallionPipeline(spark, EngineConfig(env="dev", base_path=built)).build_gold(
+        txns, custs, silver["merchants"]
+    )
+    first = custs.orderBy("customer_id").limit(1)
+    assert first.first()["customer_id"] > "CUST-FIRST"
+    inputs = {
+        "transactions": txns.orderBy("transaction_id")
+        .limit(50)
+        .withColumn("transaction_id", F.concat("transaction_id", F.lit("_NEW")))
+        .withColumn("customer_id", F.lit("CUST-FIRST")),
+        "customers": custs.unionByName(
+            first.withColumn("customer_id", F.lit("CUST-FIRST"))
+        ),
+        "merchants": silver["merchants"],
+    }
+    shutil.copytree(built, clean)
+    config = EngineConfig(env="dev", base_path=clean)
+    MedallionPipeline(spark, config).incremental_fact_update(**inputs)
+    want = {n: spark.read.parquet(config.layer_path("gold", n)) for n in GOLD}
+    return {"built": built, "inputs": inputs, "want": want}
+
+
+@pytest.mark.parametrize("failing", GOLD)
+def test_refresh_rerun_after_a_failed_gold_write_matches_a_clean_refresh(
+    refresh_case, spark, tmp_path, monkeypatch, failing
+):
+    """One refresh, two executions: a refresh whose write of one gold
+    table fails (a raising UDF column on the written frame), then
+    re-run with the same inputs, must store exactly the gold layer a
+    clean refresh stores. A failed overwrite that left the table empty
+    made the re-run number every dim key afresh, so fact rows from
+    earlier runs named the wrong customer."""
+    import shutil
+
+    import fintech_lakehouse_spark.pipeline as pipeline
+
+    shutil.copytree(refresh_case["built"], str(tmp_path / "lake"))
+    config = EngineConfig(env="dev", base_path=str(tmp_path / "lake"))
+    pipe = MedallionPipeline(spark, config)
+    target = config.layer_path("gold", failing)
+
+    @F.udf("int")
+    def boom(_):
+        raise RuntimeError("injected write failure")
+
+    def poisoned(df, path):
+        return df.withColumn("_boom", boom(F.lit(1))) if path == target else df
+
+    write, upsert = pipeline.write_lake_table, pipeline.upsert_lake_table
+    monkeypatch.setattr(
+        pipeline, "write_lake_table",
+        lambda df, path, *a, **kw: write(poisoned(df, path), path, *a, **kw),
+    )
+    monkeypatch.setattr(
+        pipeline, "upsert_lake_table",
+        lambda s, df, path, *a, **kw: upsert(s, poisoned(df, path), path, *a, **kw),
+    )
+    inputs = refresh_case["inputs"]
+    with pytest.raises(Exception, match="injected write failure"):
+        pipe.incremental_fact_update(**inputs)
+    monkeypatch.undo()
+    pipe.incremental_fact_update(**inputs)
+
+    got = {n: spark.read.parquet(config.layer_path("gold", n)) for n in GOLD}
+    for name, want in refresh_case["want"].items():
+        want = want.select(*got[name].columns)
+        assert got[name].exceptAll(want).count() == 0, f"{name}: extra rows"
+        assert want.exceptAll(got[name]).count() == 0, f"{name}: missing rows"
+    fact = got["fact_transactions"]
+    for dim, key, sk, snapshot in (
+        ("dim_customer", "customer_id", "customer_sk", inputs["customers"]),
+        ("dim_merchant", "merchant_id", "merchant_sk", inputs["merchants"]),
+    ):
+        stored = got[dim]
+        n_keys = snapshot.select(key).distinct().count()
+        assert stored.count() == stored.select(key).distinct().count() == n_keys
+        dim_sk = stored.select(key, F.col(sk).alias("_dim_sk"))
+        disagree = fact.join(dim_sk, key, "left").filter(
+            ~F.col(sk).eqNullSafe(F.col("_dim_sk"))
+        )
+        assert disagree.count() == 0, f"fact {sk} disagrees with {dim}"
+
+
 def test_build_gold_rebuilds_over_an_existing_gold_layer(lake, spark, tmp_path):
     """A second build_gold on the same base path, over a smaller batch
     (fewer customers, their transactions only, the last date gone),

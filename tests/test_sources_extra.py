@@ -60,16 +60,17 @@ def test_maintenance_gated_without_delta(spark, tmp_path, sf_dir):
         assert optimize_lake_table(spark, path, ["r_name"]) is False
         assert vacuum_lake_table(spark, path) is False
 
-        # vacuum removes crash-leftover staging dirs past retention
+        # vacuum removes crash-leftover swap dirs past retention
         import os
         import time
 
-        stale = path + "__staging"
-        os.makedirs(stale, exist_ok=True)
+        stale = [path + "__staging", path + "__old"]
         old = time.time() - 8 * 24 * 3600
-        os.utime(stale, (old, old))
+        for d in stale:
+            os.makedirs(d, exist_ok=True)
+            os.utime(d, (old, old))
         assert vacuum_lake_table(spark, path, retention_hours=168) is True
-        assert not os.path.exists(stale)
+        assert not any(os.path.exists(d) for d in stale)
         # fresh leftovers survive the retention window
         fresh = path + "__compact"
         os.makedirs(fresh, exist_ok=True)

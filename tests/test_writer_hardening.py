@@ -388,19 +388,23 @@ def test_scd2_upsert_partition_by_threads_through(spark, tmp_path):
 @pytest.mark.parametrize(
     "op", ["upsert_selective", "upsert_full", "replace", "scd2"]
 )
-def test_staged_rewrite_keeps_staging_until_copy_succeeds(
-    spark, tmp_path, monkeypatch, op
-):
-    """Every staged parquet rewrite deletes ``<path>__staging`` once
-    its copy into the target succeeded — no working dir is left behind
-    — and keeps it, holding the merged rows, when that copy fails: the
-    delete runs only after a successful overwrite, never in a finally."""
+def test_rewrite_swaps_in_whole_or_not_at_all(spark, tmp_path, op):
+    """Every parquet rewrite replaces its table whole or not at all: a
+    rewrite whose batch raises leaves the target reading its previous
+    rows, a successful one leaves no ``__staging`` / ``__old`` dir
+    behind, and a committed ``__staging`` whose table is gone (a swap
+    cut off between its renames) is swapped in by read_existing_table,
+    not taken for a first run."""
     import os
 
-    from pyspark.sql.readwriter import DataFrameWriter
+    from fintech_lakehouse_spark.sources.writers import read_existing_table
+
+    @F.udf("string")
+    def boom(v):
+        raise RuntimeError("injected write failure")
 
     path = str(tmp_path / "t")
-    staging = path + "__staging"
+    staging, old = path + "__staging", path + "__old"
     if op == "scd2":
         ts = datetime.datetime
 
@@ -417,9 +421,11 @@ def test_staged_rewrite_keeps_staging_until_copy_succeeds(
             rows(("c1", "platinum", ts(2024, 2, 1))),
             rows(("c1", "silver", ts(2024, 3, 1))),
         ]
+        failing = batches[2].withColumn("tier", boom("tier"))
         cols = ["id", "tier"]
-        # closed gold + closed platinum + the new current silver row
-        expected = {("c1", "gold"), ("c1", "platinum"), ("c1", "silver")}
+        # closed gold + the current platinum row, then + current silver
+        before = {("c1", "gold"), ("c1", "platinum")}
+        after = before | {("c1", "silver")}
     else:
 
         def rows(*r):
@@ -440,31 +446,30 @@ def test_staged_rewrite_keeps_staging_until_copy_succeeds(
             rows((2, "B", "y")),
             rows((1, "A", "x")),
         ]
+        failing = batches[2].withColumn("v", boom("v"))
         cols = ["id", "v", "d"]
-        # the selective upsert stages only the touched partition
-        expected = (
-            {(1, "A", "x")}
-            if op == "upsert_selective"
-            else {(1, "A", "x"), (2, "B", "y")}
-        )
+        before = {(1, "a", "x"), (2, "B", "y")}
+        after = {(1, "A", "x"), (2, "B", "y")}
 
-    apply(batches[0])  # first run: plain write, no staging
-    apply(batches[1])  # staged rewrite
+    def stored():
+        return {tuple(r) for r in spark.read.parquet(path).select(*cols).collect()}
+
+    apply(batches[0])  # first run: plain write
+    apply(batches[1])  # rewrite
+    assert stored() == before
+    assert not os.path.exists(staging) and not os.path.exists(old)
+
+    with pytest.raises(Exception, match="injected write failure"):
+        apply(failing)
+    assert stored() == before
+
+    os.rename(path, staging)  # cut off between the swap's renames
+    found = read_existing_table(spark, path).select(*cols).collect()
+    assert {tuple(r) for r in found} == before
     assert not os.path.exists(staging)
-
-    orig_save = DataFrameWriter.save
-
-    def failing_save(self, target=None, *a, **kw):
-        if target == path:
-            raise RuntimeError("copy into target failed")
-        return orig_save(self, target, *a, **kw)
-
-    monkeypatch.setattr(DataFrameWriter, "save", failing_save)
-    with pytest.raises(RuntimeError, match="copy into target failed"):
-        apply(batches[2])
-    monkeypatch.undo()
-    staged = spark.read.parquet(staging).select(*cols).collect()
-    assert {tuple(r) for r in staged} == expected
+    apply(batches[2])
+    assert stored() == after
+    assert not os.path.exists(staging) and not os.path.exists(old)
 
 
 # ------------------------------------------------------------- dedup_clusters
