@@ -1855,10 +1855,9 @@ def priority_mix_drift_tvd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def priority_period_counts(orders: DataFrame) -> DataFrame:
     """(priority, n_before, n_after) conditional-aggregate counts — the
-    ONE shared counting definition for the categorical drift monitor,
-    consumed by the registry query above and the streaming sink
-    (streaming/events.py::foreach_batch_cat_drift); counts are plain
-    associative sums, so per-batch partials merge by addition."""
+    counting definition of the categorical drift monitor, consumed
+    only by the registry query above; counts are plain associative
+    sums, so partials over row subsets merge by addition."""
     split_ts = F.lit(DRIFT_SPLIT).cast("timestamp")
     return orders.groupBy(
         F.col("o_orderpriority").alias("priority")

@@ -189,10 +189,13 @@ def _read_typed(
 
 # Sibling dirs of a parquet rewrite: the new copy is written to
 # ``<table>__staging``, the old one parked at ``<table>__old`` during the
-# swap. read_existing_table finishes a committed staging dir whose table
-# is gone; vacuum_lake_table reaps crash leftovers.
+# swap; a compaction stages each rewritten dir under ``<table>__compact``.
+# read_existing_table finishes a committed staging dir whose table is
+# gone, optimize/vacuum_lake_table a committed compacted dir whose
+# partition is gone; vacuum_lake_table reaps crash leftovers.
 _STAGING_SUFFIX = "__staging"
 _OLD_SUFFIX = "__old"
+_COMPACT_SUFFIX = "__compact"
 
 
 def _rename(fs, jvm, src: str, dst: str) -> None:
@@ -206,13 +209,21 @@ def _swap_in(spark: SparkSession, new: str, path: str, old: str) -> None:
     """Replace directory ``path`` by the complete directory ``new``:
     rename ``path`` aside to ``old``, ``new`` to ``path``, then delete
     ``old``. ``path`` is moved aside rather than renamed over, because
-    Hadoop moves a directory renamed onto an existing one INSIDE it."""
+    Hadoop moves a directory renamed onto an existing one INSIDE it.
+    When the second rename fails, ``old`` is renamed back, so a failed
+    swap leaves ``path`` as it was."""
     fs, jvm = hadoop_fs(spark, path)
     hpath = jvm.org.apache.hadoop.fs.Path
     fs.delete(hpath(old), True)  # left by a crash after an earlier swap
-    if fs.exists(hpath(path)):
+    moved = fs.exists(hpath(path))
+    if moved:
         _rename(fs, jvm, path, old)
-    _rename(fs, jvm, new, path)
+    try:
+        _rename(fs, jvm, new, path)
+    except Exception:
+        if moved and not fs.exists(hpath(path)):
+            _rename(fs, jvm, old, path)
+        raise
     fs.delete(hpath(old), True)
 
 
@@ -226,6 +237,32 @@ def _finish_swap(spark: SparkSession, path: str) -> None:
     fs, jvm = hadoop_fs(spark, path)
     if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
         _rename(fs, jvm, staging, path)
+
+
+def _finish_compaction(spark: SparkSession, path: str) -> None:
+    """:func:`_finish_swap`'s rule per directory of a compaction
+    (:func:`optimize_lake_table`): a committed
+    ``<path>__compact/<dir>`` whose ``<dir>`` is missing from the table
+    is the only copy of that dir's rows (the compaction was cut off
+    between its renames), so it is renamed into place. ``<dir>`` is a
+    partition dir, or the table root itself when it is unpartitioned."""
+    fs, jvm = hadoop_fs(spark, path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    base = path.rstrip("/")
+    compact = hpath(base + _COMPACT_SUFFIX)
+    if not fs.exists(compact):
+        return
+    root_name = hpath(base).getName()
+    for st in fs.listStatus(compact):
+        name = st.getPath().getName()
+        target = hpath(base if name == root_name else f"{base}/{name}")
+        if (
+            not name.endswith(_OLD_SUFFIX)
+            and dir_committed(spark, st.getPath().toString())
+            and not fs.exists(target)
+            and fs.exists(target.getParent())
+        ):
+            _rename(fs, jvm, st.getPath().toString(), target.toString())
 
 
 def _read_back(spark: SparkSession, frame: DataFrame, path: str) -> DataFrame:
@@ -759,6 +796,7 @@ def optimize_lake_table(
         spark.sql(f"OPTIMIZE delta.`{path}`{zorder}")
         return True
 
+    _finish_compaction(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     root = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(root):
@@ -795,11 +833,13 @@ def optimize_lake_table(
         # staged and swapped OUTSIDE the table root: an in-root
         # `p=1__compact` dir would read as an extra partition value
         # (duplicate rows) until a vacuum reaped it
-        staging = path.rstrip("/") + "__compact/" + d.getName()
+        staging = path.rstrip("/") + _COMPACT_SUFFIX + "/" + d.getName()
         df.write.format("parquet").mode("overwrite").save(staging)
         _swap_in(spark, staging, d.toString(), staging + _OLD_SUFFIX)
         compacted = True
-    fs.delete(jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__compact"), True)
+    fs.delete(
+        jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + _COMPACT_SUFFIX), True
+    )
     if compacted:
         spark.catalog.refreshByPath(path)
     return compacted
@@ -812,19 +852,20 @@ def vacuum_lake_table(spark: SparkSession, path: str, retention_hours: int = 168
     parquet table IS referenced, so the only unreferenced data is
     crash-leftover ``__staging`` / ``__old`` / ``__compact`` siblings
     (a rewrite or compaction killed mid-swap). After :func:`_finish_swap`
-    they are removed once older than the retention window; returns True
-    when anything was deleted."""
+    and :func:`_finish_compaction` they are removed once older than the
+    retention window; returns True when anything was deleted."""
     if lake_format() == "delta":
         spark.sql(f"VACUUM delta.`{path}` RETAIN {retention_hours} HOURS")
         return True
     import time as _time
 
     _finish_swap(spark, path)
+    _finish_compaction(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     base = path.rstrip("/")
     cutoff_ms = int((_time.time() - retention_hours * 3600) * 1000)
     deleted = False
-    for suffix in (_STAGING_SUFFIX, _OLD_SUFFIX, "__compact"):
+    for suffix in (_STAGING_SUFFIX, _OLD_SUFFIX, _COMPACT_SUFFIX):
         p = jvm.org.apache.hadoop.fs.Path(base + suffix)
         if fs.exists(p) and fs.getFileStatus(p).getModificationTime() < cutoff_ms:
             fs.delete(p, True)

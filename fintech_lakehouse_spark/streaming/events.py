@@ -13,12 +13,20 @@ batch recomputation in tests/test_streaming.py):
   availableNow trigger).
 * dedup uses dropDuplicatesWithinWatermark on event_id — bounded
   state, exactly-once per id within the watermark horizon.
-* sink: foreachBatch → MERGE-style upsert (reuses
-  sources.writers.upsert_lake_table) — idempotent under micro-batch
-  replay, the production pattern for streaming→lake writes.
+* sinks: one exactly-once rule for every foreachBatch sink, so a
+  replayed micro-batch changes nothing. The batch is persisted once
+  and an empty one writes nothing; each batch id commits at most one
+  ``_SUCCESS``-marked directory per store (``version=``, ``batch=``
+  or ``compact=``), a replayed id whose directory committed is
+  skipped, and readers list committed directories only. The lake
+  sinks MERGE through sources.writers (upsert_lake_table,
+  scd2_upsert), which is idempotent itself.
 """
 
 from __future__ import annotations
+
+import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +37,16 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from fintech_lakehouse_spark.sources.writers import (
+    dir_committed,
+    hadoop_fs,
+    local_path_of,
+    read_existing_table,
+    scd2_upsert,
+    snapshot_diff,
+    upsert_lake_table,
 )
 
 EVENTS_SCHEMA = StructType(
@@ -605,6 +623,200 @@ def user_funnel_state(events: DataFrame) -> DataFrame:
     )
 
 
+# The exactly-once rule every foreachBatch sink below follows (module
+# docstring, "sinks"): structured streaming replays a micro-batch id
+# after a failure, and a replayed id must change nothing.
+
+_SINK_SHUFFLE_PARTITIONS = 8
+
+
+@contextmanager
+def _sink_shuffle_partitions(spark: SparkSession):
+    """Size in-sink shuffles to a micro-batch (``_SINK_SHUFFLE_PARTITIONS``)
+    instead of the session's scan-sized setting. The session value is
+    restored on every exit path; the setting is session-scoped, so a
+    query planned CONCURRENTLY on the same session could observe it."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(_SINK_SHUFFLE_PARTITIONS))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _run_unless_empty(frame: DataFrame, work) -> None:
+    """Persist ``frame`` and run ``work(frame)`` unless it is empty —
+    the quiet-trigger guard of every sink. ONE job materializes the
+    cache and answers emptiness (r12, VERDICT r11 item 1: a separate
+    isEmpty probe was an extra per-batch source scan), and every action
+    in ``work`` re-reads the cache. The cache is released on every
+    exit path, a failed ``work`` included."""
+    frame = frame.persist()
+    try:
+        if frame.count() > 0:
+            work(frame)
+    finally:
+        frame.unpersist()
+
+
+def _committed_dirs(
+    spark: SparkSession, root: str, prefix: str, upto: int | None = None
+) -> list[tuple[int, str]]:
+    """``(n, path)`` of every committed (``_SUCCESS``) ``<prefix><n>``
+    directory under ``root`` with n ≤ ``upto`` (None = all), sorted by
+    n. A directory a producer crashed inside holds a partial write and
+    is never listed. Local roots are listed with os.* (no py4j round
+    trips per micro-batch); remote ones (s3a://, hdfs://) through the
+    path's own Hadoop FileSystem, so their history resolves instead of
+    silently reading as empty."""
+    root = root.rstrip("/")
+    lp = local_path_of(root)
+    if lp is not None:
+        names = os.listdir(lp) if os.path.isdir(lp) else []
+    else:
+        fs, jvm = hadoop_fs(spark, root)
+        p = jvm.org.apache.hadoop.fs.Path(root)
+        names = (
+            [s.getPath().getName() for s in fs.listStatus(p)]
+            if fs.exists(p)
+            else []
+        )
+    found = []
+    for name in names:
+        if not name.startswith(prefix):
+            continue
+        n = int(name[len(prefix):])
+        path = f"{root}/{name}"
+        if (upto is None or n <= upto) and dir_committed(spark, path):
+            found.append((n, path))
+    return sorted(found)
+
+
+def _lsm_live_dirs(
+    spark: SparkSession, root: str, max_version: int | None = None
+) -> list[str]:
+    """Live directories of an LSM-shaped versioned store (r9, VERDICT
+    r8 item 1): per-batch DELTAS land as ``version=<batch_id>`` dirs;
+    a periodic COMPACTION folds the whole state into a
+    ``compact=<batch_id>`` dir. The current state is the union of the
+    newest committed compact dir plus every committed delta AFTER it —
+    deltas at or below the compaction point are superseded (kept only
+    as garbage, never read). Compaction identity lives in the DIR NAME,
+    not a marker file, so there is no crash window in which a full
+    snapshot could be mistaken for a delta and double-counted.
+
+    ``max_version`` (inclusive) bounds the view for replay: a retried
+    batch folds state strictly BELOW its own id, so a crashed prior
+    attempt's own output is never its input."""
+    deltas = _committed_dirs(spark, root, "version=", max_version)
+    compacts = _committed_dirs(spark, root, "compact=", max_version)
+    if not compacts:
+        return [path for _, path in deltas]
+    base_v, base = compacts[-1]
+    return [base] + [path for v, path in deltas if v > base_v]
+
+
+def _lsm_read(
+    spark: SparkSession,
+    store: str,
+    cols: list[str],
+    max_version: int | None = None,
+) -> DataFrame | None:
+    """The live segments of ``store`` (:func:`_lsm_live_dirs`) as one
+    frame of ``cols``, or None while the store is empty. Per-dir reads:
+    a compacted (bucket-partitioned) base and flat deltas cannot share
+    one multi-root scan (Spark's partition discovery rejects the
+    conflicting structures)."""
+    out = None
+    for d in _lsm_live_dirs(spark, store, max_version):
+        seg = spark.read.parquet(d).select(*cols)
+        out = seg if out is None else out.unionByName(seg)
+    return out
+
+
+def _lsm_segment(
+    store: str, batch_id: int, compact_every: int
+) -> tuple[str, bool]:
+    """``(dir, is_compaction)`` of batch ``batch_id``'s segment of
+    ``store``: every ``compact_every``-th batch (never batch 0) writes
+    a ``compact=<id>`` snapshot, every other batch a ``version=<id>``
+    delta."""
+    compact = (
+        compact_every > 0 and batch_id > 0 and batch_id % compact_every == 0
+    )
+    return f"{store}/{'compact' if compact else 'version'}={batch_id}", compact
+
+
+def _write_lsm_segment(
+    spark: SparkSession,
+    store: str,
+    batch_id: int,
+    compact_every: int,
+    delta: DataFrame,
+    fold=lambda full: full,
+    bucket: tuple | None = None,
+) -> None:
+    """Write batch ``batch_id``'s segment of the LSM store ``store``
+    once; a committed segment dir is skipped. A delta batch writes
+    ``delta`` as one file — BATCH-sized, nothing is rewritten
+    in-flight. A compaction batch folds every live segment STRICTLY
+    BELOW this batch (replay safety) plus ``delta`` through ``fold``
+    into one snapshot; ``bucket`` = ``(name, column)`` hash-partitions
+    that snapshot by ``name`` so probes prune to their buckets."""
+    seg, compact = _lsm_segment(store, batch_id, compact_every)
+    if dir_committed(spark, seg):
+        return
+    if not compact:
+        delta.coalesce(1).write.mode("overwrite").parquet(seg)
+        return
+    prev = _lsm_read(spark, store, delta.columns, max_version=batch_id - 1)
+    full = fold(delta if prev is None else delta.unionByName(prev))
+    if bucket is None:
+        full.write.mode("overwrite").parquet(seg)
+        return
+    name, col = bucket
+    full.withColumn(name, col).repartition(name).write.mode(
+        "overwrite"
+    ).partitionBy(name).parquet(seg)
+
+
+def _snapshot_sink(view_path: str, fold):
+    """The versioned-snapshot sink behind foreach_batch_ivm,
+    foreach_batch_sketch_rollup and foreach_batch_drift:
+    ``fold(batch, current)`` builds the new state from the persisted
+    micro-batch and the previous committed snapshot (None before the
+    first one).
+
+    Exactly-once without a transaction log: batch N writes the whole
+    state as ``version=N/``. A retried batch id whose version directory
+    already committed (_SUCCESS) is SKIPPED; an uncommitted retry
+    recomputes from the newest committed version below N —
+    deterministic because the checkpoint pins batch-id → content.
+    Readers take the newest committed version (read_materialized_view),
+    which also yields time travel for free. coalesce(1): the state is
+    group-cardinality sized; a single part file keeps the snapshot
+    listing O(versions), and an EMPTY state still writes a
+    schema-bearing footer so the next read round-trips."""
+    root = view_path.rstrip("/")
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        vdir = f"{root}/version={batch_id}"
+        if dir_committed(spark, vdir):
+            return  # retry of a committed batch: exactly-once skip
+
+        def write(batch: DataFrame) -> None:
+            current = read_materialized_view(spark, root, version=batch_id - 1)
+            fold(batch, current).coalesce(1).write.mode("overwrite").parquet(
+                vdir
+            )
+
+        _run_unless_empty(batch_df, write)
+
+    return _apply
+
+
 def foreach_batch_upsert(
     target_path: str,
     merge_keys: list[str],
@@ -617,27 +829,20 @@ def foreach_batch_upsert(
     micro-batch touches (selective overwrite) — the shape a continuous
     100 TB ingest needs, since each micro-batch lands in one or two
     date partitions."""
-    from fintech_lakehouse_spark.sources.writers import upsert_lake_table
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # ONE job materializes the cache and answers the quiet-trigger
-        # guard (r12, VERDICT r11 item 1: the old isEmpty probe was an
-        # extra per-batch source scan); without the guard the
-        # no-partition path would read, dedup and fully rewrite the
-        # target as a no-op. The merge below re-reads the CACHE.
-        batch = batch_df.persist()
-        try:
-            if batch.count() == 0:
-                return
-            upsert_lake_table(
+        # without the quiet-trigger guard the no-partition path would
+        # read, dedup and fully rewrite the target as a no-op
+        _run_unless_empty(
+            batch_df,
+            lambda batch: upsert_lake_table(
                 batch.sparkSession,
                 batch,
                 target_path,
                 merge_keys=merge_keys,
                 partition_by=partition_by,
-            )
-        finally:
-            batch.unpersist()
+            ),
+        )
 
     return _write
 
@@ -658,25 +863,19 @@ def foreach_batch_scd2(
     Streaming dimension maintenance is the standard CDC-consumer
     shape: the upstream source is a change feed, the lake table keeps
     point-in-time history for ``operators.joins.point_in_time_join``."""
-    from fintech_lakehouse_spark.sources.writers import scd2_upsert
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # one job = cache materialization + quiet-trigger guard (r12);
-        # the SCD2 merge re-reads the cache, not the source
-        batch = batch_df.persist()
-        try:
-            if batch.count() == 0:
-                return
-            scd2_upsert(
+        _run_unless_empty(
+            batch_df,
+            lambda batch: scd2_upsert(
                 batch.sparkSession,
                 batch,
                 target_path,
                 key=key,
                 tracked_cols=tracked_cols,
                 ts_col=ts_col,
-            )
-        finally:
-            batch.unpersist()
+            ),
+        )
 
     return _write
 
@@ -711,26 +910,14 @@ def foreach_batch_cdf(
     reconstructs the table exactly (the snapshot_diff replay guarantee,
     property-tested in tests/test_property_based.py); the streaming
     test pins it end-to-end."""
-    from fintech_lakehouse_spark.sources.writers import (
-        read_existing_table,
-        snapshot_diff,
-        upsert_lake_table,
-    )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        # one job = cache materialization + quiet-trigger guard (r12);
         # the diff AND the upsert below both re-read the cache
-        batch_df = batch_df.persist()
-        try:
-            _write_inner(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
+        _run_unless_empty(batch_df, lambda batch: _write_inner(batch, batch_id))
 
     def _write_inner(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
 
-        if batch_df.count() == 0:
-            return
         spark = batch_df.sparkSession
         latest = batch_df
         if order_by:
@@ -775,14 +962,14 @@ def foreach_batch_cdf(
         # the recomputed diff is empty and an overwrite would erase
         # the batch's changelog rows. A partial write (no _SUCCESS)
         # is replaced cleanly by the overwrite. The marker probe goes
-        # through the path's own Hadoop FileSystem (_dir_committed),
+        # through the path's own Hadoop FileSystem (dir_committed),
         # so remote URIs get the same exactly-once skip as local ones.
         # Readers of the root see the `batch` partition column plus
         # the `_batch_id` data column (identical values; the data
         # column is kept because underscore-prefixed partition DIRS
         # would be invisible to parquet partition discovery).
         batch_dir = f"{changelog_path.rstrip('/')}/batch={batch_id}"
-        if not _dir_committed(spark, batch_dir):
+        if not dir_committed(spark, batch_dir):
             changelog.withColumn("_batch_id", F.lit(batch_id)).write.mode(
                 "overwrite"
             ).parquet(batch_dir)
@@ -791,70 +978,6 @@ def foreach_batch_cdf(
         )
 
     return _write
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Delegates to sources.writers.hadoop_fs — the scheme-aware
-    FileSystem lookup lives in ONE module; this alias keeps the
-    streaming-local call sites short."""
-    from fintech_lakehouse_spark.sources.writers import hadoop_fs
-
-    return hadoop_fs(spark, path)
-
-
-def _dir_committed(spark: SparkSession, directory: str) -> bool:
-    from fintech_lakehouse_spark.sources.writers import dir_committed
-
-    return dir_committed(spark, directory)
-
-
-def _lsm_live_dirs(
-    spark: SparkSession, root: str, max_version: int | None = None
-) -> list[str]:
-    """Live directories of an LSM-shaped versioned store (r9, VERDICT
-    r8 item 1): per-batch DELTAS land as ``version=<batch_id>`` dirs;
-    a periodic COMPACTION folds the whole state into a
-    ``compact=<batch_id>`` dir. The current state is the union of the
-    newest committed compact dir plus every committed delta AFTER it —
-    deltas at or below the compaction point are superseded (kept only
-    as garbage, never read). Compaction identity lives in the DIR NAME,
-    not a marker file, so there is no crash window in which a full
-    snapshot could be mistaken for a delta and double-counted.
-
-    ``max_version`` (inclusive) bounds the view for replay: a retried
-    batch folds state strictly BELOW its own id, so a crashed prior
-    attempt's own output is never its input."""
-    import os
-
-    from fintech_lakehouse_spark.sources.writers import local_path_of
-
-    lp = local_path_of(root.rstrip("/"))
-    if lp is not None:  # local fast path: no py4j round trips
-        if not os.path.isdir(lp):
-            return []
-        names = os.listdir(lp)
-    else:
-        fs, jvm = _hadoop_fs(spark, root)
-        p = jvm.org.apache.hadoop.fs.Path(root.rstrip("/"))
-        if not fs.exists(p):
-            return []
-        names = [s.getPath().getName() for s in fs.listStatus(p)]
-    deltas: list[tuple[int, str]] = []
-    compacts: list[tuple[int, str]] = []
-    for name in names:
-        for prefix, pool in (("version=", deltas), ("compact=", compacts)):
-            if name.startswith(prefix):
-                v = int(name.split("=", 1)[1])
-                if max_version is not None and v > max_version:
-                    continue
-                full = f"{root.rstrip('/')}/{name}"
-                if _dir_committed(spark, full):
-                    pool.append((v, full))
-    base = max(compacts) if compacts else None
-    live = [path for v, path in sorted(deltas) if base is None or v > base[0]]
-    if base is not None:
-        live.insert(0, base[1])
-    return live
 
 
 def table_as_of_batch(
@@ -893,25 +1016,14 @@ def table_as_of_batch(
     the target table's columns exactly)."""
     from pyspark.sql.window import Window
 
-    from fintech_lakehouse_spark.sources.writers import hadoop_fs
-
-    fs, jvm = hadoop_fs(spark, changelog_path)
-    root = jvm.org.apache.hadoop.fs.Path(changelog_path.rstrip("/"))
-    committed = []
-    if fs.exists(root):
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if (
-                st.isDirectory()
-                and name.startswith("batch=")
-                and _dir_committed(spark, f"{changelog_path.rstrip('/')}/{name}")
-            ):
-                committed.append(st.getPath().toString())
+    committed = [
+        path for _, path in _committed_dirs(spark, changelog_path, "batch=")
+    ]
     if not committed:
         raise FileNotFoundError(
             f"no committed changelog batches under {changelog_path}"
         )
-    log = spark.read.parquet(*sorted(committed)).filter(
+    log = spark.read.parquet(*committed).filter(
         F.col("_change_type") != "update_preimage"
     )
     if batch_id is not None:
@@ -931,30 +1043,15 @@ def read_materialized_view(
     """Read the latest committed version of a foreach_batch_ivm view
     (or a specific ``version`` — the view-side VERSION AS OF, the
     companion of table_as_of_batch). Returns None if no committed
-    version exists yet. Listing goes through the path's own Hadoop
-    FileSystem, so remote view paths (s3a://, hdfs://) resolve their
-    history correctly instead of silently reading as empty — an
-    os.path probe here would make every remote IVM batch bootstrap
+    version exists yet. Remote view paths (s3a://, hdfs://) are listed
+    through their own Hadoop FileSystem (:func:`_committed_dirs`), so
+    their history resolves instead of silently reading as empty — an
+    os.path probe there would make every remote IVM batch bootstrap
     from None and reset the view to its own delta."""
-    fs, jvm = _hadoop_fs(spark, view_path)
-    root = jvm.org.apache.hadoop.fs.Path(view_path.rstrip("/"))
-    if not fs.exists(root):
+    versions = _committed_dirs(spark, view_path, "version=", version)
+    if not versions:
         return None
-    versions = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if name.startswith("version=") and _dir_committed(
-            spark, f"{view_path.rstrip('/')}/{name}"
-        ):
-            versions.append(int(name.split("=", 1)[1]))
-    if version is not None:
-        candidates = [v for v in versions if v <= version]
-    else:
-        candidates = versions
-    if not candidates:
-        return None
-    chosen = max(candidates)
-    return spark.read.parquet(f"{view_path.rstrip('/')}/version={chosen}")
+    return spark.read.parquet(versions[-1][1])
 
 
 def foreach_batch_ivm(
@@ -974,11 +1071,10 @@ def foreach_batch_ivm(
 
     Exactly-once without a transaction log: the view is written as
     versioned snapshots ``version=<consumer_batch_id>/`` (each
-    group-cardinality sized, so snapshots are cheap). A retried batch
-    id whose version directory already committed (_SUCCESS) is
-    SKIPPED; an uncommitted retry recomputes from the last committed
-    version — deterministic because the checkpoint pins batch-id →
-    changelog content. Readers take the newest committed version
+    group-cardinality sized, so snapshots are cheap) by
+    :func:`_snapshot_sink` — a committed retry is skipped, an
+    uncommitted one recomputes from the last committed version.
+    Readers take the newest committed version
     (read_materialized_view), which also yields view-level time
     travel for free, mirroring table_as_of_batch on the table side.
 
@@ -993,33 +1089,11 @@ def foreach_batch_ivm(
 
     sum_aliases = list(sum_cols or {})
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = view_path.rstrip("/")
-        vdir = f"{root}/version={batch_id}"
-        if _dir_committed(spark, vdir):
-            return  # retry of a committed batch: exactly-once skip
-        # one job = cache materialization + quiet-trigger guard (r12);
-        # the delta aggregation below re-reads the cache
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.count() == 0:
-                return
-            _ivm_inner(spark, batch_df, root, vdir, batch_id)
-        finally:
-            batch_df.unpersist()
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
+        delta = changelog_agg_delta(batch, group_cols, sum_cols)
+        return apply_agg_delta(current, delta, group_cols, sum_aliases)
 
-    def _ivm_inner(spark, batch_df, root, vdir, batch_id) -> None:
-        current = read_materialized_view(spark, root, version=batch_id - 1)
-        delta = changelog_agg_delta(batch_df, group_cols, sum_cols)
-        merged = apply_agg_delta(current, delta, group_cols, sum_aliases)
-        # coalesce(1): the view is group-cardinality sized; a single
-        # part file keeps the snapshot listing O(versions), and an
-        # EMPTY view still writes a schema-bearing footer so the next
-        # read round-trips.
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
-
-    return _apply
+    return _snapshot_sink(view_path, fold)
 
 
 def foreach_batch_sketch_rollup(
@@ -1046,9 +1120,9 @@ def foreach_batch_sketch_rollup(
     the hot path scales with history: state is group-cardinality ×
     ~KB-sized sketches.
 
-    Exactly-once snapshotting is foreach_batch_ivm's scheme verbatim:
-    versioned ``version=<batch_id>/`` snapshot dirs, committed-retry
-    skip, readers take the newest committed version
+    Exactly-once snapshotting is :func:`_snapshot_sink`, shared with
+    foreach_batch_ivm: versioned ``version=<batch_id>/`` snapshot dirs,
+    committed-retry skip, readers take the newest committed version
     (read_materialized_view) — which also yields sketch-state time
     travel (estimate "as of consumer batch N") for free.
 
@@ -1057,43 +1131,25 @@ def foreach_batch_sketch_rollup(
     ``theta_intersection`` across rows for retention/overlap,
     ``theta_difference`` for churn."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = view_path.rstrip("/")
-        vdir = f"{root}/version={batch_id}"
-        if _dir_committed(spark, vdir):
-            return  # retry of a committed batch: exactly-once skip
-        # one job = cache materialization + quiet-trigger guard (r12);
-        # the sketch partial below re-reads the cache
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.count() == 0:
-                return
-            _sketch_inner(spark, batch_df, root, vdir, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _sketch_inner(spark, batch_df, root, vdir, batch_id) -> None:
-        partial = batch_df.groupBy(*group_cols).agg(
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
+        partial = batch.groupBy(*group_cols).agg(
             F.hll_sketch_agg(F.col(key_col).cast("string")).alias("hll_sk"),
             F.theta_sketch_agg(F.col(key_col).cast("string")).alias(
                 "theta_sk"
             ),
             F.count(F.lit(1)).alias("n_rows"),
         )
-        current = read_materialized_view(spark, root, version=batch_id - 1)
         if current is not None:
             partial = current.select(
                 *group_cols, "hll_sk", "theta_sk", "n_rows"
             ).unionByName(partial)
-        merged = partial.groupBy(*group_cols).agg(
+        return partial.groupBy(*group_cols).agg(
             F.hll_union_agg("hll_sk").alias("hll_sk"),
             F.theta_union_agg("theta_sk").alias("theta_sk"),
             F.sum("n_rows").cast("long").alias("n_rows"),
         )
-        merged.coalesce(1).write.mode("overwrite").parquet(vdir)
 
-    return _apply
+    return _snapshot_sink(view_path, fold)
 
 
 def foreach_batch_online_dedup(
@@ -1104,7 +1160,6 @@ def foreach_batch_online_dedup(
     shingle_n: int = 3,
     threshold: float = 0.5,
     compact_every: int = 16,
-    shuffle_partitions: int | None = 8,
 ):
     """foreachBatch ONLINE near-duplicate detection — the streaming
     form of the MinHash-LSH-verify corpus dedup (plans/text.py
@@ -1136,7 +1191,7 @@ def foreach_batch_online_dedup(
     pairs against the store's precomputed shingle arrays (see the r9
     note below). State appends are versioned
     ``version=<batch_id>`` dirs with the committed-retry skip
-    (exactly-once, foreach_batch_ivm's scheme); decisions land the
+    (exactly-once, :func:`_write_lsm_segment`); decisions land the
     same way so a replayed batch cannot double-emit.
 
     r9 (VERDICT r8 item 1): state dirs are LSM-managed — per-batch
@@ -1154,19 +1209,17 @@ def foreach_batch_online_dedup(
     re-shingling, no candidate semi-join stage — the r8 form paid ~3
     extra shuffle stages per micro-batch for work the state already
     contained. The tiny candidate side broadcast-joins under AQE, so
-    stored shingles are scanned once and never shuffled.
-    ``shuffle_partitions`` (default 8) sizes in-sink shuffles to
-    micro-batch volume instead of the session's scan-sized setting —
-    the session value is restored after every batch; pass None to
-    leave it alone (e.g. huge batches on a real cluster, or when OTHER
-    queries run CONCURRENTLY on the same session — the setting is
-    session-scoped, so a concurrent planner could observe it)."""
+    stored shingles are scanned once and never shuffled. In-sink
+    shuffles are sized to micro-batch volume
+    (:func:`_sink_shuffle_partitions`)."""
     from fintech_lakehouse_spark.functions.text import (
         band_signatures,
         jaccard_pair_join,
         minhash_signatures_md5,
         with_shingles,
     )
+
+    state_root = state_path.rstrip("/")
 
     def _bands(sig: DataFrame) -> DataFrame:
         # the SHARED validated band hash (functions/text.py) — the
@@ -1178,67 +1231,47 @@ def foreach_batch_online_dedup(
             "band_sig", "band_hash"
         )
 
-    def _committed_union(spark: SparkSession, root: str, cols: list[str]):
-        dirs = _lsm_live_dirs(spark, root)
-        if not dirs:
-            return None
-        # per-dir reads: a compacted (bb-partitioned) base and flat
-        # deltas cannot share one multi-root scan
-        out = None
-        for d in dirs:
-            seg = spark.read.parquet(d).select(*cols)
-            out = seg if out is None else out.unionByName(seg)
-        return out
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         dec_dir = f"{decisions_path.rstrip('/')}/version={batch_id}"
-        if _dir_committed(spark, dec_dir):
+        if dir_committed(spark, dec_dir):
             return  # replayed committed batch: exactly-once skip
-        # emptiness is decided INSIDE _apply_inner by the count that
-        # materializes the persisted batch (VERDICT r10 item 2: a
-        # separate isEmpty probe was a second source scan per
-        # micro-batch — pure fixed cost at small batch sizes)
-        # size in-sink shuffles to the micro-batch; the try/finally
-        # spans EVERYTHING after the set so no exception path leaks
-        # the session conf
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        # the persisted frame is the SHINGLED batch: without the cache
+        # each action in this sink (two state writes, decisions)
+        # re-reads the batch file AND re-runs the md5 minhash pipeline
+        # — the streaming bench measured ~6 engine re-scans per batch
+        # (BASELINE §streaming engine_rows column)
+        docs = with_shingles(batch_df.select("doc_id", "text"), shingle_n)
+        with _sink_shuffle_partitions(spark):
+            _run_unless_empty(
+                docs, lambda batch: _dedup(spark, batch, batch_id, dec_dir)
             )
-        try:
-            _apply_inner(spark, batch_df, batch_id, dec_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
-    def _apply_inner(
-        spark: SparkSession, batch_df: DataFrame, batch_id: int, dec_dir: str
+    def _dedup(
+        spark: SparkSession, batch: DataFrame, batch_id: int, dec_dir: str
     ) -> None:
-        # persist the two frames every downstream action re-derives:
-        # without this, each action in this sink (two state writes,
-        # decisions) re-reads the batch file AND re-runs the md5
-        # minhash pipeline — the streaming bench measured ~6 engine
-        # re-scans per batch (BASELINE §streaming engine_rows column)
-        batch = with_shingles(
-            batch_df.select("doc_id", "text"), shingle_n
-        ).persist()
-        # ONE job both materializes the cache and answers emptiness —
-        # every downstream action reads the cache, so this scan was
-        # already being paid; the old isEmpty probe was an extra one
-        if batch.count() == 0:
-            batch.unpersist()
-            return
         sig = minhash_signatures_md5(
             batch.select("doc_id", F.explode("shingles").alias("shingle")),
             n_hashes,
         )
         bands = _bands(sig).persist()
-        stored_bands = _committed_union(
-            spark, f"{state_path.rstrip('/')}/bands", ["doc_id", "band_hash"]
+        try:
+            _dedup_bands(spark, batch, bands, batch_id, dec_dir)
+        finally:
+            bands.unpersist()
+
+    def _dedup_bands(
+        spark: SparkSession,
+        batch: DataFrame,
+        bands: DataFrame,
+        batch_id: int,
+        dec_dir: str,
+    ) -> None:
+        stored_bands = _lsm_read(
+            spark, f"{state_root}/bands", ["doc_id", "band_hash"]
         )
-        stored_sh = _committed_union(
-            spark, f"{state_path.rstrip('/')}/docs", ["doc_id", "shingles"]
+        stored_sh = _lsm_read(
+            spark, f"{state_root}/docs", ["doc_id", "shingles"]
         )
         hist = (
             stored_bands.withColumnRenamed("doc_id", "doc_a")
@@ -1299,51 +1332,20 @@ def foreach_batch_online_dedup(
         # — harmless because the history probe filters doc_a < doc_b —
         # whereas the reverse order would return early on replay with
         # the state append lost forever, silently shrinking the store.
-        # Each state dir is itself idempotent via its version path.
-        state_root = state_path.rstrip("/")
-        compact = compact_every > 0 and batch_id > 0 and (
-            batch_id % compact_every == 0
+        # Each state segment is itself idempotent via its dir. A
+        # compaction's dropDuplicates guards the replay window where
+        # the store already holds this batch; the compacted band store
+        # is hash-partitioned by bb so probes prune buckets.
+        _write_lsm_segment(
+            spark, f"{state_root}/bands", batch_id, compact_every, bands,
+            fold=lambda full: full.dropDuplicates(),
+            bucket=("bb", F.pmod(F.xxhash64("band_hash"), F.lit(32))),
         )
-        try:
-            for sub, delta, cols in (
-                ("bands", bands, ["doc_id", "band_hash"]),
-                ("docs", batch, ["doc_id", "text", "shingles"]),
-            ):
-                kind = "compact" if compact else "version"
-                vdir = f"{state_root}/{sub}/{kind}={batch_id}"
-                if _dir_committed(spark, vdir):
-                    continue
-                if compact:
-                    # fold segments STRICTLY BELOW this batch + the
-                    # batch delta into one snapshot (dropDuplicates
-                    # guards the replay window where the store already
-                    # holds this batch). The compacted band store is
-                    # hash-partitioned by bb so probes prune buckets.
-                    full = delta.select(*cols)
-                    for d in _lsm_live_dirs(
-                        spark, f"{state_root}/{sub}",
-                        max_version=batch_id - 1,
-                    ):
-                        full = full.unionByName(
-                            spark.read.parquet(d).select(*cols)
-                        )
-                    full = full.dropDuplicates(cols[:1] if sub == "docs"
-                                               else cols)
-                    if sub == "bands":
-                        full.withColumn(
-                            "bb",
-                            F.pmod(F.xxhash64("band_hash"), F.lit(32)),
-                        ).repartition("bb").write.mode(
-                            "overwrite"
-                        ).partitionBy("bb").parquet(vdir)
-                    else:
-                        full.write.mode("overwrite").parquet(vdir)
-                else:
-                    delta.coalesce(1).write.mode("overwrite").parquet(vdir)
-            decisions.coalesce(1).write.mode("overwrite").parquet(dec_dir)
-        finally:
-            bands.unpersist()
-            batch.unpersist()
+        _write_lsm_segment(
+            spark, f"{state_root}/docs", batch_id, compact_every, batch,
+            fold=lambda full: full.dropDuplicates(["doc_id"]),
+        )
+        decisions.coalesce(1).write.mode("overwrite").parquet(dec_dir)
 
     return _apply
 
@@ -1376,7 +1378,6 @@ def _term_bucket_py(term: str) -> int:
 def foreach_batch_bm25_index(
     index_path: str,
     compact_every: int = 16,
-    shuffle_partitions: int | None = 8,
 ):
     """foreachBatch INCREMENTAL SEARCH-INDEX maintenance — the
     streaming producer of the lexical-retrieval state
@@ -1406,42 +1407,13 @@ def foreach_batch_bm25_index(
     maintained state alone; the streaming≡batch test asserts its
     top-20 EQUALS the registry query's output on the same corpus —
     same un-logged idf, same rounding, same tie-break."""
+    root = index_path.rstrip("/")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        root = index_path.rstrip("/")
-        compact = compact_every > 0 and batch_id > 0 and (
-            batch_id % compact_every == 0
-        )
-        post_dir = (
-            f"{root}/postings/{'compact' if compact else 'version'}"
-            f"={batch_id}"
-        )
-        if _dir_committed(spark, post_dir):
+        post_dir, _ = _lsm_segment(f"{root}/postings", batch_id, compact_every)
+        if dir_committed(spark, post_dir):
             return  # replayed committed batch: exactly-once skip
-        # emptiness is decided inside _apply_inner by the count that
-        # materializes the persisted batch (VERDICT r10 item 2)
-        # size in-sink shuffles to the micro-batch; the try/finally
-        # spans everything after the set so no exception path leaks
-        # the session conf
-        prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        if shuffle_partitions:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(shuffle_partitions)
-            )
-        try:
-            _apply_inner(spark, batch_df, batch_id, compact, post_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    def _apply_inner(
-        spark: SparkSession,
-        batch_df: DataFrame,
-        batch_id: int,
-        compact: bool,
-        post_dir: str,
-    ) -> None:
-        root = index_path.rstrip("/")
         toks = F.split("text", " ")
         # persisted: sized feeds both the postings build and the
         # totals delta — without caching, each action re-reads and
@@ -1449,12 +1421,11 @@ def foreach_batch_bm25_index(
         # diagnostic, BASELINE §streaming)
         sized = batch_df.select(
             "doc_id", toks.alias("toks"), F.size(toks).alias("dl")
-        ).persist()
-        # one job materializes the cache AND answers emptiness (the
-        # old isEmpty probe was an extra per-batch source scan)
-        if sized.count() == 0:
-            sized.unpersist()
-            return
+        )
+        with _sink_shuffle_partitions(spark):
+            _run_unless_empty(sized, lambda s: _index(spark, s, batch_id))
+
+    def _index(spark: SparkSession, sized: DataFrame, batch_id: int) -> None:
         postings = sized.select(
             "doc_id", "dl", F.explode("toks").alias("term")
         ).groupBy("term", "doc_id", "dl").agg(
@@ -1464,58 +1435,21 @@ def foreach_batch_bm25_index(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("dl").cast("long").alias("total_dl"),
         )
-        if compact:
-            # fold state STRICTLY BELOW this batch (replay safety) +
-            # this batch's delta into one snapshot per store
-            prev_post = _lsm_live_dirs(
-                spark, f"{root}/postings", max_version=batch_id - 1
-            )
-            # per-dir reads: a compacted (tb-partitioned) base and flat
-            # deltas cannot share one multi-root scan (Spark's partition
-            # discovery rejects the conflicting structures)
-            for d in prev_post:
-                postings = postings.unionByName(
-                    spark.read.parquet(d).select(
-                        "term", "doc_id", "dl", "tf"
-                    )
-                )
-            prev_tot = _lsm_live_dirs(
-                spark, f"{root}/totals", max_version=batch_id - 1
-            )
-            if prev_tot:
-                tot_delta = (
-                    spark.read.parquet(*prev_tot)
-                    .unionByName(tot_delta)
-                    .agg(
-                        F.sum("n_docs").cast("long").alias("n_docs"),
-                        F.sum("total_dl").cast("long").alias("total_dl"),
-                    )
-                )
         # totals first, postings last: the postings dir is the batch
         # commit point (the early-return keys on it), so a crash in
         # between replays the batch and the totals write skips via its
         # own committed dir
-        try:
-            tot_dir = (
-                f"{root}/totals/{'compact' if compact else 'version'}"
-                f"={batch_id}"
-            )
-            if not _dir_committed(spark, tot_dir):
-                tot_delta.coalesce(1).write.mode("overwrite").parquet(
-                    tot_dir
-                )
-            if compact:
-                postings.withColumn(
-                    "tb", _term_bucket_col("term")
-                ).repartition("tb").write.mode("overwrite").partitionBy(
-                    "tb"
-                ).parquet(post_dir)
-            else:
-                postings.coalesce(1).write.mode("overwrite").parquet(
-                    post_dir
-                )
-        finally:
-            sized.unpersist()
+        _write_lsm_segment(
+            spark, f"{root}/totals", batch_id, compact_every, tot_delta,
+            fold=lambda full: full.agg(
+                F.sum("n_docs").cast("long").alias("n_docs"),
+                F.sum("total_dl").cast("long").alias("total_dl"),
+            ),
+        )
+        _write_lsm_segment(
+            spark, f"{root}/postings", batch_id, compact_every, postings,
+            bucket=("tb", _term_bucket_col("term")),
+        )
 
     return _apply
 
@@ -1607,10 +1541,11 @@ def foreach_batch_drift(view_path: str):
     ever streamed — the streaming≡batch test asserts exact row
     equality, not tolerance.
 
-    Exactly-once snapshotting is foreach_batch_ivm's scheme verbatim:
-    versioned ``version=<batch_id>/`` dirs, committed-retry skip,
-    readers take the newest committed version — drift-verdict time
-    travel ("what did the monitor say as of batch N") for free.
+    Exactly-once snapshotting is :func:`_snapshot_sink`, shared with
+    foreach_batch_ivm: versioned ``version=<batch_id>/`` dirs,
+    committed-retry skip, readers take the newest committed version —
+    drift-verdict time travel ("what did the monitor say as of batch
+    N") for free.
 
     100 TB shape: nothing in the hot path scales with history — state
     is DRIFT_BINS rows; the batch-side cost is one conditional-agg
@@ -1620,25 +1555,8 @@ def foreach_batch_drift(view_path: str):
         drift_readout,
     )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        root = view_path.rstrip("/")
-        vdir = f"{root}/version={batch_id}"
-        if _dir_committed(spark, vdir):
-            return  # retry of a committed batch: exactly-once skip
-        # one job = cache materialization + quiet-trigger guard (r12);
-        # the bucket-count scan below re-reads the cache
-        batch_df = batch_df.persist()
-        try:
-            if batch_df.count() == 0:
-                return
-            _drift_inner(spark, batch_df, root, vdir, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _drift_inner(spark, batch_df, root, vdir, batch_id) -> None:
-        partial = drift_bucket_counts(batch_df)
-        current = read_materialized_view(spark, root, version=batch_id - 1)
+    def fold(batch: DataFrame, current: DataFrame | None) -> DataFrame:
+        partial = drift_bucket_counts(batch)
         if current is not None:
             # drop the bucket=-1 TVD summary row before merging — its
             # n_a/n_b are the grand totals and would double-count
@@ -1651,11 +1569,9 @@ def foreach_batch_drift(view_path: str):
             F.sum("n_a").cast("long").alias("n_a"),
             F.sum("n_b").cast("long").alias("n_b"),
         )
-        drift_readout(merged).coalesce(1).write.mode("overwrite").parquet(
-            vdir
-        )
+        return drift_readout(merged)
 
-    return _apply
+    return _snapshot_sink(view_path, fold)
 
 
 GAP_SCHEMA = (

@@ -126,6 +126,86 @@ def test_optimize_compacts_small_files(spark, tmp_path, sf_dir):
     assert {d: files(d) for d in parts} == snapshot
 
 
+def _fragmented_table(spark, path, partitioned=True):
+    """3,600 rows in 6 appends, so every dir holds more files than
+    optimize_lake_table's default 4 and gets compacted; partitioned
+    tables have 3 partitions of 1,200 rows."""
+    for i in range(6):
+        rows = spark.range(i * 600, (i + 1) * 600).withColumn("p", F.col("id") % 3)
+        write_lake_table(
+            rows,
+            path,
+            mode="append" if i else "overwrite",
+            partition_by=["p"] if partitioned else None,
+        )
+
+
+def _ids(spark, path):
+    return sorted(r["id"] for r in spark.read.parquet(path).select("id").collect())
+
+
+@pytest.mark.skipif(lake_format() != "parquet", reason="parquet-mode compaction")
+def test_optimize_cut_off_between_renames_keeps_every_row(
+    spark, tmp_path, monkeypatch
+):
+    """A compaction whose second rename fails: optimize_lake_table
+    raises, the partition it was swapping is renamed back, and a vacuum
+    afterwards still reads every row."""
+    import os
+
+    from fintech_lakehouse_spark.sources import writers
+
+    path = str(tmp_path / "cut")
+    _fragmented_table(spark, path)
+    assert _ids(spark, path) == list(range(3600))
+    real, calls = writers._rename, []
+
+    def second_rename_fails(fs, jvm, src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected rename failure")
+        real(fs, jvm, src, dst)
+
+    monkeypatch.setattr(writers, "_rename", second_rename_fails)
+    with pytest.raises(OSError, match="injected"):
+        optimize_lake_table(spark, path)
+    assert _ids(spark, path) == list(range(3600))
+    vacuum_lake_table(spark, path, retention_hours=0)
+    assert _ids(spark, path) == list(range(3600))
+    assert not os.path.exists(path + "__compact")
+
+
+@pytest.mark.skipif(lake_format() != "parquet", reason="parquet-mode compaction")
+@pytest.mark.parametrize(
+    "maintenance, partitioned",
+    [("vacuum", True), ("optimize", True), ("vacuum", False)],
+)
+def test_maintenance_finishes_a_compaction_cut_off_between_renames(
+    spark, tmp_path, maintenance, partitioned
+):
+    """The on-disk state of a compaction killed between its renames:
+    one dir (a partition, or the root of an unpartitioned table) is
+    gone, its rows sit only in the committed ``<table>__compact/<dir>``
+    and its old copy in ``<dir>__old`` beside it. Both maintenance
+    entry points rename the compacted copy into place before anything
+    reaps ``__compact``."""
+    import os
+
+    path = str(tmp_path / "crash")
+    _fragmented_table(spark, path, partitioned)
+    cut = f"{path}/p=1" if partitioned else path
+    staging = f"{path}__compact/{os.path.basename(cut)}"
+    spark.read.parquet(cut).coalesce(1).write.parquet(staging)
+    os.rename(cut, staging + "__old")
+
+    if maintenance == "vacuum":
+        vacuum_lake_table(spark, path, retention_hours=0)
+        assert not os.path.exists(path + "__compact")
+    else:
+        optimize_lake_table(spark, path)
+    assert _ids(spark, path) == list(range(3600))
+
+
 def test_csv_bronze_ingestion_roundtrip(spark, tmp_path):
     """Generator → CSV landing → PERMISSIVE bronze read with explicit
     schema → silver cast: the reference's entry-point-B flow

@@ -1613,3 +1613,148 @@ def test_windowed_ohlc_matches_batch_registry_query(spark, events_dir):
         (r["bar_ts"],) + tuple(r[c] for c in cols) for r in batch.collect()
     )
     assert got_n == want_n and len(got_n) > 100
+
+
+def _docs_batch(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"document {i} about spark streaming sinks and state") for i in ids],
+        "doc_id long, text string",
+    )
+
+
+@pytest.mark.parametrize(
+    "sink_name", ["foreach_batch_online_dedup", "foreach_batch_bm25_index"]
+)
+def test_corpus_sink_failure_releases_cache_and_conf(spark, tmp_path, sink_name):
+    """A corpus sink that fails on a stored segment it cannot read must
+    raise AND leave the session as it found it: no cached frame left in
+    the CacheManager, and spark.sql.shuffle.partitions back at its value
+    before the call."""
+    import glob
+    import os
+
+    from fintech_lakehouse_spark.streaming import events
+
+    root = str(tmp_path / "store")
+    if sink_name == "foreach_batch_online_dedup":
+        sink = events.foreach_batch_online_dedup(root, str(tmp_path / "dec"))
+        segment = f"{root}/bands/version=0"
+    else:
+        # compact_every=1 makes batch 1 a compaction, the only bm25
+        # batch that reads stored segments
+        sink = events.foreach_batch_bm25_index(root, compact_every=1)
+        segment = f"{root}/postings/version=0"
+    sink(_docs_batch(spark, [1, 2]), 0)
+    parts = glob.glob(f"{segment}/*.parquet")
+    assert parts
+    for f in parts:
+        os.remove(f)
+    with open(f"{segment}/part-00000-junk.parquet", "wb") as fh:
+        fh.write(b"this is not a parquet file")
+
+    spark.catalog.clearCache()
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(Exception):
+        sink(_docs_batch(spark, [3, 4]), 1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def _sink_case(spark, name, root):
+    """(sink, first batch, read-back) for one foreachBatch sink rooted
+    at ``root``; the read-back returns the sink's target, view or
+    state as sorted rows."""
+    import datetime as dt
+
+    from fintech_lakehouse_spark import streaming as st
+
+    def rows(*frames):
+        return [
+            sorted((tuple(r) for r in f.collect()), key=repr) for f in frames
+        ]
+
+    if name == "upsert":
+        sink = st.foreach_batch_upsert(f"{root}/t", merge_keys=["k"])
+        first = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+        return sink, first, lambda: rows(spark.read.parquet(f"{root}/t"))
+    if name == "scd2":
+        sink = st.foreach_batch_scd2(
+            f"{root}/t", key="customer_id", tracked_cols=["risk_rating"]
+        )
+        first = spark.createDataFrame(
+            [(1, "LOW", dt.datetime(2024, 1, 1))],
+            "customer_id long, risk_rating string, effective_ts timestamp",
+        )
+        return sink, first, lambda: rows(spark.read.parquet(f"{root}/t"))
+    if name == "cdf":
+        sink = st.foreach_batch_cdf(
+            f"{root}/t", f"{root}/cl", key="k", order_by="v"
+        )
+        first = spark.createDataFrame([(1, 1), (2, 1)], "k long, v long")
+        return sink, first, lambda: rows(
+            spark.read.parquet(f"{root}/t"),
+            st.table_as_of_batch(spark, f"{root}/cl", "k"),
+        )
+    if name == "ivm":
+        sink = st.foreach_batch_ivm(f"{root}/v", ["grp"], {"total": "amount"})
+        first = spark.createDataFrame(
+            [(1, "a", 10.0, "insert")],
+            "k long, grp string, amount double, _change_type string",
+        )
+    elif name == "sketch_rollup":
+        sink = st.foreach_batch_sketch_rollup(f"{root}/v", ["g"], "u")
+        first = spark.createDataFrame([(1, 10), (2, 11)], "g long, u long")
+    elif name == "drift":
+        sink = st.foreach_batch_drift(f"{root}/v")
+        first = spark.createDataFrame(
+            [(1, 50.0, dt.datetime(1997, 1, 1)), (2, 70.0, dt.datetime(1998, 6, 1))],
+            "o_orderkey long, o_totalprice double, o_orderdate timestamp",
+        )
+    elif name == "online_dedup":
+        sink = st.foreach_batch_online_dedup(f"{root}/s", f"{root}/d")
+        first = _docs_batch(spark, [1, 2])
+        return sink, first, lambda: rows(
+            spark.read.parquet(f"{root}/d/version=*"),
+            spark.read.parquet(f"{root}/s/docs/version=*"),
+        )
+    else:
+        assert name == "bm25_index"
+        sink = st.foreach_batch_bm25_index(f"{root}/i")
+        first = _docs_batch(spark, [1, 2])
+        return sink, first, lambda: rows(
+            st.read_bm25_index(spark, f"{root}/i", ["spark", "document"])
+        )
+    return sink, first, lambda: rows(
+        st.read_materialized_view(spark, f"{root}/v")
+    )
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "upsert", "scd2", "cdf", "ivm",
+        "sketch_rollup", "online_dedup", "bm25_index", "drift",
+    ],
+)
+def test_empty_micro_batch_writes_nothing(spark, tmp_path, name):
+    """The quiet-trigger rule of every foreachBatch sink: an empty
+    micro-batch creates no directory or file, and the sink's target,
+    view or state reads exactly as before."""
+    import os
+
+    root = str(tmp_path / name)
+    sink, first, read_back = _sink_case(spark, name, root)
+    sink(first, 0)
+
+    def tree():
+        return {
+            os.path.join(d, n)
+            for d, dirs, files in os.walk(root)
+            for n in dirs + files
+        }
+
+    paths, before = tree(), read_back()
+    assert before[0], "the first batch must leave something to read"
+    sink(spark.createDataFrame([], first.schema), 1)
+    assert tree() == paths
+    assert read_back() == before
