@@ -189,10 +189,10 @@ def _read_typed(
 
 # Sibling dirs of a parquet rewrite: the new copy is written to
 # ``<table>__staging``, the old one parked at ``<table>__old`` during the
-# swap; a compaction stages each rewritten dir under ``<table>__compact``.
-# read_existing_table finishes a committed staging dir whose table is
-# gone, optimize/vacuum_lake_table a committed compacted dir whose
-# partition is gone; vacuum_lake_table reaps crash leftovers.
+# swap; a compaction stages each rewritten dir under ``<table>__compact``
+# and parks the original at ``<table>__compact/<dir>__old``.
+# _finish_swaps finishes a swap cut off between its renames;
+# vacuum_lake_table reaps crash leftovers.
 _STAGING_SUFFIX = "__staging"
 _OLD_SUFFIX = "__old"
 _COMPACT_SUFFIX = "__compact"
@@ -210,8 +210,9 @@ def _swap_in(spark: SparkSession, new: str, path: str, old: str) -> None:
     rename ``path`` aside to ``old``, ``new`` to ``path``, then delete
     ``old``. ``path`` is moved aside rather than renamed over, because
     Hadoop moves a directory renamed onto an existing one INSIDE it.
-    When the second rename fails, ``old`` is renamed back, so a failed
-    swap leaves ``path`` as it was."""
+    When the second rename fails, ``old`` is renamed back and ``new``
+    deleted, so a failed swap leaves ``path`` as it was and no staged
+    copy that a later recovery could mistake for the table."""
     fs, jvm = hadoop_fs(spark, path)
     hpath = jvm.org.apache.hadoop.fs.Path
     fs.delete(hpath(old), True)  # left by a crash after an earlier swap
@@ -223,29 +224,42 @@ def _swap_in(spark: SparkSession, new: str, path: str, old: str) -> None:
     except Exception:
         if moved and not fs.exists(hpath(path)):
             _rename(fs, jvm, old, path)
+            fs.delete(hpath(new), True)
         raise
     fs.delete(hpath(old), True)
 
 
-def _finish_swap(spark: SparkSession, path: str) -> None:
-    """Finish a swap cut off between its renames: ``path`` is gone and
-    ``<path>__staging`` holds a committed (``_SUCCESS``) copy, which is
-    the table — so a table caught mid-swap never reads as a first run."""
-    staging = path.rstrip("/") + _STAGING_SUFFIX
-    if not dir_committed(spark, staging):
-        return
+def _finish_swap(
+    spark: SparkSession,
+    path: str,
+    staged: str | None = None,
+    old: str | None = None,
+) -> None:
+    """Finish a :func:`_swap_in` cut off between its renames: ``path``
+    is gone and ``staged`` (default ``<path>__staging``) holds a
+    committed (``_SUCCESS``) copy, which is renamed into place — so a
+    table caught mid-swap never reads as a first run. When ``old`` is
+    given it must exist too: the proof that the swap had parked
+    ``path`` there, for a dir that may also be missing because a later
+    write removed it."""
+    staged = staged or path.rstrip("/") + _STAGING_SUFFIX
     fs, jvm = hadoop_fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
-        _rename(fs, jvm, staging, path)
+    hpath = jvm.org.apache.hadoop.fs.Path
+    if fs.exists(hpath(path)) or (old and not fs.exists(hpath(old))):
+        return
+    if dir_committed(spark, staged):
+        _rename(fs, jvm, staged, path)
 
 
-def _finish_compaction(spark: SparkSession, path: str) -> None:
-    """:func:`_finish_swap`'s rule per directory of a compaction
-    (:func:`optimize_lake_table`): a committed
-    ``<path>__compact/<dir>`` whose ``<dir>`` is missing from the table
-    is the only copy of that dir's rows (the compaction was cut off
-    between its renames), so it is renamed into place. ``<dir>`` is a
-    partition dir, or the table root itself when it is unpartitioned."""
+def _finish_swaps(spark: SparkSession, path: str) -> None:
+    """:func:`_finish_swap` for every swap of the table at ``path``: the
+    table rewrite's (:func:`_staged_overwrite`), then each compacted
+    dir's (:func:`optimize_lake_table`) — ``<path>__compact/<dir>``
+    staged for ``<dir>``, a partition dir or the table root itself when
+    it is unpartitioned. A partition dir goes missing when a write
+    empties it, so a compacted copy is moved in only on the proof of
+    its ``<dir>__old``; a stale one would bring back removed rows."""
+    _finish_swap(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     hpath = jvm.org.apache.hadoop.fs.Path
     base = path.rstrip("/")
@@ -254,15 +268,10 @@ def _finish_compaction(spark: SparkSession, path: str) -> None:
         return
     root_name = hpath(base).getName()
     for st in fs.listStatus(compact):
-        name = st.getPath().getName()
-        target = hpath(base if name == root_name else f"{base}/{name}")
-        if (
-            not name.endswith(_OLD_SUFFIX)
-            and dir_committed(spark, st.getPath().toString())
-            and not fs.exists(target)
-            and fs.exists(target.getParent())
-        ):
-            _rename(fs, jvm, st.getPath().toString(), target.toString())
+        name, staged = st.getPath().getName(), st.getPath().toString()
+        if not name.endswith(_OLD_SUFFIX):
+            target = base if name == root_name else f"{base}/{name}"
+            _finish_swap(spark, target, staged, staged + _OLD_SUFFIX)
 
 
 def _read_back(spark: SparkSession, frame: DataFrame, path: str) -> DataFrame:
@@ -320,7 +329,7 @@ def _staged_overwrite(
     its replacement is, so ``frame`` may read ``path`` itself, and a
     failed write leaves the previous table in place. Returns the
     committed table (:func:`_read_back`)."""
-    _finish_swap(spark, path)
+    _finish_swaps(spark, path)
     base = path.rstrip("/")
     w = _parquet_overwrite(_shape_for_write(frame, partition_by, cluster_by), partition_by)
     if compression:
@@ -445,7 +454,7 @@ def read_existing_table(
     run"; everything else (transient FS error, permission, a damaged
     table) re-raises rather than being silently overwritten (ADVICE r4
     medium #2, r5 low #2). A swap cut off midway is finished first."""
-    _finish_swap(spark, path)
+    _finish_swaps(spark, path)
     try:
         return (read or read_lake_table)(spark, path)
     except Exception as exc:
@@ -796,7 +805,7 @@ def optimize_lake_table(
         spark.sql(f"OPTIMIZE delta.`{path}`{zorder}")
         return True
 
-    _finish_compaction(spark, path)
+    _finish_swaps(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     root = jvm.org.apache.hadoop.fs.Path(path)
     if not fs.exists(root):
@@ -851,16 +860,15 @@ def vacuum_lake_table(spark: SparkSession, path: str, retention_hours: int = 168
     Delta mode: real VACUUM. Parquet mode: every file under a plain
     parquet table IS referenced, so the only unreferenced data is
     crash-leftover ``__staging`` / ``__old`` / ``__compact`` siblings
-    (a rewrite or compaction killed mid-swap). After :func:`_finish_swap`
-    and :func:`_finish_compaction` they are removed once older than the
-    retention window; returns True when anything was deleted."""
+    (a rewrite or compaction killed mid-swap). After :func:`_finish_swaps`
+    they are removed once older than the retention window; returns True
+    when anything was deleted."""
     if lake_format() == "delta":
         spark.sql(f"VACUUM delta.`{path}` RETAIN {retention_hours} HOURS")
         return True
     import time as _time
 
-    _finish_swap(spark, path)
-    _finish_compaction(spark, path)
+    _finish_swaps(spark, path)
     fs, jvm = hadoop_fs(spark, path)
     base = path.rstrip("/")
     cutoff_ms = int((_time.time() - retention_hours * 3600) * 1000)

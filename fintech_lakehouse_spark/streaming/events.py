@@ -1256,96 +1256,87 @@ def foreach_batch_online_dedup(
         )
         bands = _bands(sig).persist()
         try:
-            _dedup_bands(spark, batch, bands, batch_id, dec_dir)
+            stored_bands = _lsm_read(
+                spark, f"{state_root}/bands", ["doc_id", "band_hash"]
+            )
+            stored_sh = _lsm_read(
+                spark, f"{state_root}/docs", ["doc_id", "shingles"]
+            )
+            hist = (
+                stored_bands.withColumnRenamed("doc_id", "doc_a")
+                .join(
+                    F.broadcast(bands.withColumnRenamed("doc_id", "doc_b")),
+                    "band_hash",
+                )
+                # doc_a < doc_b is a no-op in normal operation (stored ids
+                # are always smaller under the monotone-arrival contract)
+                # but load-bearing on REPLAY: state commits before
+                # decisions (see write order below), so a replayed batch
+                # finds its own fingerprints in the store and must not
+                # match docs against themselves or later arrivals
+                .filter(F.col("doc_a") < F.col("doc_b"))
+                .select("doc_a", "doc_b")
+                if stored_bands is not None
+                else None
+            )
+            b2 = bands.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
+                "band_hash", "bh"
+            )
+            within = (
+                bands.join(b2, F.col("band_hash") == F.col("bh"))
+                .filter(F.col("doc_id") < F.col("doc_b"))
+                .select(F.col("doc_id").alias("doc_a"), "doc_b")
+            )
+            cands = (
+                within.unionByName(hist) if hist is not None else within
+            ).distinct()
+            # verify directly against stored shingle ARRAYS: no stored-text
+            # rescan, no re-shingling, no semi-join stage. Replay-window
+            # duplicate doc rows (store already holding this batch) only
+            # duplicate pair rows, which the min() resolution absorbs.
+            sh_all = (
+                batch.select("doc_id", "shingles").unionByName(stored_sh)
+                if stored_sh is not None
+                else batch.select("doc_id", "shingles")
+            )
+            verified = jaccard_pair_join(cands, sh_all, threshold)
+            decisions = (
+                batch.join(
+                    verified.groupBy("doc_b").agg(
+                        F.min("doc_a").alias("dup_of")
+                    ),
+                    batch["doc_id"] == F.col("doc_b"),
+                    "left",
+                )
+                .select(
+                    "doc_id",
+                    F.col("dup_of").isNotNull().alias("is_dup"),
+                    "dup_of",
+                )
+            )
+            # state commits BEFORE decisions (review finding r7): decisions
+            # are the batch's commit point (the early-return above keys on
+            # them), so a crash after state but before decisions replays
+            # the batch against a store that already holds its fingerprints
+            # — harmless because the history probe filters doc_a < doc_b —
+            # whereas the reverse order would return early on replay with
+            # the state append lost forever, silently shrinking the store.
+            # Each state segment is itself idempotent via its dir. A
+            # compaction's dropDuplicates guards the replay window where
+            # the store already holds this batch; the compacted band store
+            # is hash-partitioned by bb so probes prune buckets.
+            _write_lsm_segment(
+                spark, f"{state_root}/bands", batch_id, compact_every, bands,
+                fold=lambda full: full.dropDuplicates(),
+                bucket=("bb", F.pmod(F.xxhash64("band_hash"), F.lit(32))),
+            )
+            _write_lsm_segment(
+                spark, f"{state_root}/docs", batch_id, compact_every, batch,
+                fold=lambda full: full.dropDuplicates(["doc_id"]),
+            )
+            decisions.coalesce(1).write.mode("overwrite").parquet(dec_dir)
         finally:
             bands.unpersist()
-
-    def _dedup_bands(
-        spark: SparkSession,
-        batch: DataFrame,
-        bands: DataFrame,
-        batch_id: int,
-        dec_dir: str,
-    ) -> None:
-        stored_bands = _lsm_read(
-            spark, f"{state_root}/bands", ["doc_id", "band_hash"]
-        )
-        stored_sh = _lsm_read(
-            spark, f"{state_root}/docs", ["doc_id", "shingles"]
-        )
-        hist = (
-            stored_bands.withColumnRenamed("doc_id", "doc_a")
-            .join(
-                F.broadcast(bands.withColumnRenamed("doc_id", "doc_b")),
-                "band_hash",
-            )
-            # doc_a < doc_b is a no-op in normal operation (stored ids
-            # are always smaller under the monotone-arrival contract)
-            # but load-bearing on REPLAY: state commits before
-            # decisions (see write order below), so a replayed batch
-            # finds its own fingerprints in the store and must not
-            # match docs against themselves or later arrivals
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            if stored_bands is not None
-            else None
-        )
-        b2 = bands.withColumnRenamed("doc_id", "doc_b").withColumnRenamed(
-            "band_hash", "bh"
-        )
-        within = (
-            bands.join(b2, F.col("band_hash") == F.col("bh"))
-            .filter(F.col("doc_id") < F.col("doc_b"))
-            .select(F.col("doc_id").alias("doc_a"), "doc_b")
-        )
-        cands = (
-            within.unionByName(hist) if hist is not None else within
-        ).distinct()
-        # verify directly against stored shingle ARRAYS: no stored-text
-        # rescan, no re-shingling, no semi-join stage. Replay-window
-        # duplicate doc rows (store already holding this batch) only
-        # duplicate pair rows, which the min() resolution absorbs.
-        sh_all = (
-            batch.select("doc_id", "shingles").unionByName(stored_sh)
-            if stored_sh is not None
-            else batch.select("doc_id", "shingles")
-        )
-        verified = jaccard_pair_join(cands, sh_all, threshold)
-        decisions = (
-            batch.join(
-                verified.groupBy("doc_b").agg(
-                    F.min("doc_a").alias("dup_of")
-                ),
-                batch["doc_id"] == F.col("doc_b"),
-                "left",
-            )
-            .select(
-                "doc_id",
-                F.col("dup_of").isNotNull().alias("is_dup"),
-                "dup_of",
-            )
-        )
-        # state commits BEFORE decisions (review finding r7): decisions
-        # are the batch's commit point (the early-return above keys on
-        # them), so a crash after state but before decisions replays
-        # the batch against a store that already holds its fingerprints
-        # — harmless because the history probe filters doc_a < doc_b —
-        # whereas the reverse order would return early on replay with
-        # the state append lost forever, silently shrinking the store.
-        # Each state segment is itself idempotent via its dir. A
-        # compaction's dropDuplicates guards the replay window where
-        # the store already holds this batch; the compacted band store
-        # is hash-partitioned by bb so probes prune buckets.
-        _write_lsm_segment(
-            spark, f"{state_root}/bands", batch_id, compact_every, bands,
-            fold=lambda full: full.dropDuplicates(),
-            bucket=("bb", F.pmod(F.xxhash64("band_hash"), F.lit(32))),
-        )
-        _write_lsm_segment(
-            spark, f"{state_root}/docs", batch_id, compact_every, batch,
-            fold=lambda full: full.dropDuplicates(["doc_id"]),
-        )
-        decisions.coalesce(1).write.mode("overwrite").parquet(dec_dir)
 
     return _apply
 

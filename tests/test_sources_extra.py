@@ -206,6 +206,81 @@ def test_maintenance_finishes_a_compaction_cut_off_between_renames(
     assert _ids(spark, path) == list(range(3600))
 
 
+@pytest.mark.skipif(lake_format() != "parquet", reason="parquet-mode compaction")
+@pytest.mark.parametrize("leftover", ["failed_swap", "killed_before_swap"])
+def test_emptied_partition_stays_empty_after_a_cut_off_compaction(
+    spark, tmp_path, monkeypatch, leftover
+):
+    """A compaction that never swapped its partition out (its second
+    rename failed, or the process died between the staging write and
+    the swap) leaves no proof in ``<dir>__old``. Once a later upsert
+    moves every key out of that partition, a vacuum must not bring the
+    compacted copy of its rows back."""
+    import os
+
+    from fintech_lakehouse_spark.sources import writers
+    from fintech_lakehouse_spark.sources.writers import upsert_lake_table
+
+    path = str(tmp_path / "stale")
+    _fragmented_table(spark, path)
+    if leftover == "failed_swap":
+        real, calls = writers._rename, []
+
+        def second_rename_fails(fs, jvm, src, dst):
+            calls.append(src)
+            if len(calls) == 2:
+                raise OSError("injected rename failure")
+            real(fs, jvm, src, dst)
+
+        monkeypatch.setattr(writers, "_rename", second_rename_fails)
+        with pytest.raises(OSError, match="injected"):
+            optimize_lake_table(spark, path)
+        monkeypatch.undo()
+        part = os.path.basename(calls[0])  # the dir the swap parked aside
+    else:
+        part = "p=1"
+        spark.read.parquet(f"{path}/{part}").coalesce(1).write.parquet(
+            f"{path}__compact/{part}"
+        )
+    p = int(part.split("=")[1])
+    moved = (
+        spark.range(3600)
+        .filter(F.col("id") % 3 == p)
+        .withColumn("p", F.lit((p + 1) % 3).cast("long"))
+    )
+    upsert_lake_table(spark, moved, path, merge_keys=["id"], partition_by=["p"])
+    assert not os.path.exists(f"{path}/{part}")
+
+    vacuum_lake_table(spark, path, retention_hours=0)
+    assert _ids(spark, path) == list(range(3600))
+    assert not os.path.exists(f"{path}/{part}")
+    assert not os.path.exists(path + "__compact")
+
+
+@pytest.mark.skipif(lake_format() != "parquet", reason="parquet-mode compaction")
+def test_optimize_finishes_a_cut_off_rewrite_not_a_stale_compaction(
+    spark, tmp_path
+):
+    """An unpartitioned table whose rewrite was cut off between its
+    renames (root parked at ``__old``, the new rows committed in
+    ``__staging``) beside a stale compacted copy of its old root:
+    optimize_lake_table swaps the rewrite in, not the stale copy."""
+    import os
+
+    path = str(tmp_path / "root")
+    _fragmented_table(spark, path, partitioned=False)
+    spark.read.parquet(path).coalesce(1).write.parquet(
+        f"{path}__compact/{os.path.basename(path)}"
+    )
+    spark.range(100).withColumn("p", F.col("id") % 3).write.parquet(
+        path + "__staging"
+    )
+    os.rename(path, path + "__old")
+
+    optimize_lake_table(spark, path)
+    assert _ids(spark, path) == list(range(100))
+
+
 def test_csv_bronze_ingestion_roundtrip(spark, tmp_path):
     """Generator → CSV landing → PERMISSIVE bronze read with explicit
     schema → silver cast: the reference's entry-point-B flow
